@@ -36,6 +36,16 @@ import org.apache.spark.sql.functions._
  * stream side of a semi join are silently unsupported by Spark (the hint is
  * dropped with a HintErrorLogger warning and the big table shuffles); this
  * formulation is hint-correct by construction.
+ *
+ * Which sets reach the driver: none, inside this object — every function
+ * returns a lazy frame. The level-5 loader ([[Loader.level5Apply]])
+ * collects the three change-set-sized ones: the table's change keys, the
+ * repaired keys of [[fixChangedKeys]] and the (key, action) pairs of
+ * [[classifyChanges]]. Each is bounded by the day's delta, as the
+ * reference's `_tmp_inc_change`/`_tmp_inc_actions` temp tables are, and
+ * passed back in as a driver-local relation it broadcasts straight from
+ * the driver. The current table, the increment rows and the full-snapshot
+ * diff of [[fullDiff]] (as large as the table) stay distributed.
  */
 object Diff {
 
@@ -76,7 +86,9 @@ object Diff {
       changeKeys: DataFrame,
       key: String,
       uniqueCols: Seq[String]): DataFrame = {
-    val chg = changeKeys.select(col(key)).distinct()
+    // duplicate keys need no distinct here: the change set only builds a
+    // semi join, and the result is made distinct once, at the end
+    val chg = changeKeys.select(col(key))
     // incoming rows that are in the change set — change-set sized
     val incChg = inc.join(broadcast(chg), Seq(key), "left_semi")
     val stale = uniqueCols.map { u =>
@@ -98,7 +110,7 @@ object Diff {
    * @param cur        current table contents
    * @param inc        incoming (working-copy) data for this increment
    * @param changeKeys change table keys for this table (one `key` column;
-   *                   dupes tolerated — first made distinct)
+   *                   dupes tolerated — the keys only build semi joins)
    * @param key        the table key column (int/bigint in the reference)
    * @param uniqueCols secondary unique-constraint columns (for 'X' actions
    *                   and key-swap repair)
@@ -116,7 +128,7 @@ object Diff {
       uniqueCols: Seq[String] = Nil,
       repairKeySwaps: Boolean = true): DataFrame = {
     val compareCols = inc.columns.filter(_ != key).toSeq
-    val chg0 = changeKeys.select(col(key)).distinct()
+    val chg0 = changeKeys.select(col(key))
     val chg  = if (repairKeySwaps && uniqueCols.nonEmpty)
                  fixChangedKeys(cur, inc, chg0, key, uniqueCols)
                else chg0
@@ -173,12 +185,12 @@ object Diff {
       inc: DataFrame,
       actions: DataFrame,
       key: String): DataFrame = {
-    // The action set feeds TWO broadcast key derivations below, so callers
-    // with an expensive `actions` lineage (the full classify pipeline is
-    // itself two scans of the big tables) should pass it CACHED — both
-    // Loader paths do, and they unpersist it once the merge is consumed
-    // (caching here instead would leak: this function returns a lazy frame
-    // and never sees the consuming action).
+    // The action set feeds TWO broadcast key derivations below, so an
+    // `actions` lineage that runs the classify pipeline (itself two scans
+    // of the big tables) must be materialized first: the level-5 loader
+    // passes its collected pairs as a driver-local relation, the level-0
+    // diff a cached frame (caching here instead would leak: this function
+    // returns a lazy frame and never sees the consuming action).
     val acts = actions.select(col(key), col("action"))
     val removeKeys = acts
       .where(col("action").isin(ActionDelete, ActionUpdate, ActionUniqueShift))

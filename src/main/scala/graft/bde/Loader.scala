@@ -1,7 +1,10 @@
 package graft.bde
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * E1/E2/E3 — the load paths, wiring reader → cleanser → projection → diff →
@@ -104,6 +107,23 @@ object Loader {
   // them unique across the many loads of a multi-table run.
   private val obsId = new java.util.concurrent.atomic.AtomicLong
 
+  /** `df` with a row count riding along as an observed metric of whichever
+    * action evaluates it; read it with [[observedRows]] after that action
+    * (`Observation.get` blocks until then). */
+  private def counted(df: DataFrame): (DataFrame, Observation) = {
+    val obs = Observation(s"graft_rows_${obsId.incrementAndGet()}")
+    (df.observe(obs, count(lit(1)).as("rows")), obs)
+  }
+
+  private def observedRows(obs: Observation): Long =
+    obs.get("rows").asInstanceOf[Long]
+
+  /** A driver-local relation holding `rows`: filtering or collecting it runs
+    * no Spark job, and broadcasting it ships the rows from the driver with
+    * no scan or shuffle (one small job per broadcast). */
+  private def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
   /** Read one file with header-or-override schema; when a file-error budget
     * is set, malformed rows are dropped AND counted in the same scan (the
     * returned Observation's `malformed` metric — see [[enforceBudget]]). */
@@ -168,15 +188,12 @@ object Loader {
         .map(cols => BdeFormat.selectValidColumns(df, cols))
         .getOrElse(df)
     }
-    val rowsObs = Observation(s"graft_rows_${obsId.incrementAndGet()}")
-    val staged = sink.stage(
-      projected.reduce(_ unionByName _)
-        .observe(rowsObs, count(lit(1)).as("rows")),
-      version)
+    val (rows, rowsObs) = counted(projected.reduce(_ unionByName _))
+    val staged = sink.stage(rows, version)
     try enforceBudget(files.zip(parts.map(_._3)), maxFileErrors)
     catch { case e: Throwable => sink.discard(staged); throw e }
     sink.publish(staged)
-    LoadStats(sink.table, rowsObs.get("rows").asInstanceOf[Long], 0, 0, 0,
+    LoadStats(sink.table, observedRows(rowsObs), 0, 0, 0,
       aborted = false, "", buildDetails(files, parts.map(_._1)))
   }
 
@@ -188,6 +205,21 @@ object Loader {
    * the current version (J1-J3+J5), merged, tolerance-gated, and published;
    * stats mirror `_ver_apply_changes` + the null-update count
    * (sql:1757-1765).
+   *
+   * The reference pre-filters and indexes the change keys once per table
+   * and counts rows with `GET DIAGNOSTICS ROW_COUNT` (sql:1689-1717,
+   * 2133-2134). The same fold here: the three change-set-sized sets — this
+   * table's change keys, the key-swap-repaired keys and the (key, action)
+   * pairs — are each computed once and collected to the driver, as the
+   * reference keeps them in `_tmp_inc_change`/`_tmp_inc_actions`. Each is
+   * bounded by the day's delta, never by the table. Passed on as local
+   * relations they broadcast from the driver without recomputing anything,
+   * and the I/U/0/X/D stats are counted there. `cur`, the increment rows
+   * and the merge stay distributed. The old and new row counts for the
+   * tolerance gate are observed metrics of the staged write, so nothing
+   * re-counts `cur` or re-reads the staged version. Given a driver-local
+   * `changeTable` (as [[Orchestrator]] passes it), taking this table's keys
+   * runs no Spark job either.
    */
   def level5Apply(
       spark: SparkSession,
@@ -217,23 +249,15 @@ object Loader {
       continuityWarnHours, continuityFailHours)
     val details = buildDetails(files, headers)
     // The increment is change-set-sized (a daily delta, never the big
-    // table) and is consumed by both the classifier and the merge — cache
-    // it so the files are scanned once for the whole load.
+    // table) and is consumed by the key-swap repair, the classifier and the
+    // merge — cache it so the files are scanned once for the whole load.
+    // One try/finally releases it on EVERY exit — returns, aborts, and
+    // exceptions from any stage (a failing table otherwise pins its cache
+    // for the rest of a 94-table run).
     val inc = parts
       .map { case (_, df, _) => BdeFormat.selectValidColumns(df, cur.columns.toSeq) }
       .reduce(_ unionByName _)
       .cache()
-    // P4: this table's change keys (case-insensitive table match), cast to
-    // the table's key type (int/bigint per bde_TableKeyIsValid)
-    val chgKeys = changeTable
-      .where(lower(col("tablename")) === tableName.toLowerCase)
-      .select(col("tablekeyvalue").cast(cur.schema(key).dataType).as(key))
-    // caches live exactly as long as the load: one try/finally releases
-    // `inc` and the classified `actions` on EVERY exit — returns, aborts,
-    // and exceptions from any stage (a failing table otherwise pins its
-    // caches for the rest of a 94-table run)
-    val actions =
-      Diff.classifyChanges(cur, inc, chgKeys, key, uniqueCols).cache()
     try {
       if (maxFileErrors.isDefined) {
         // one materializing action = each file scanned exactly once; the
@@ -243,18 +267,38 @@ object Loader {
         enforceBudget(files.zip(parts.map(_._3)), maxFileErrors)
       }
 
+      // P4: this table's distinct change keys (case-insensitive table
+      // match), cast to the table's key type (int/bigint per
+      // bde_TableKeyIsValid)
+      val chgDf = changeTable
+        .where(lower(col("tablename")) === tableName.toLowerCase)
+        .select(col("tablekeyvalue").cast(cur.schema(key).dataType).as(key))
+      val chgRows = chgDf.collect().toSeq.distinct
       // early exit on zero changes (sql:1713,1771-1773)
-      if (chgKeys.isEmpty)
+      if (chgRows.isEmpty)
         return LoadStats(tableName, 0, 0, 0, 0, aborted = false, "",
           details, warnings)
-      val counts = actions.groupBy("action").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val chg = local(spark, chgRows, chgDf.schema)
+      // J5 once, collected: the classifier then runs on the repaired keys
+      // without repeating the repair
+      val repaired =
+        if (uniqueCols.isEmpty) chg
+        else {
+          val fixed = Diff.fixChangedKeys(cur, inc, chg, key, uniqueCols)
+          local(spark, fixed.collect().toSeq, fixed.schema)
+        }
+      val classified = Diff.classifyChanges(cur, inc, repaired, key, uniqueCols,
+        repairKeySwaps = false)
+      val actionRows = classified.collect().toSeq
+      val actions = local(spark, actionRows, classified.schema)
+      val counts = actionRows.groupMapReduce(_.getString(1))(_ => 1L)(_ + _)
       def n(a: String) = counts.getOrElse(a, 0L)
 
-      val merged = Diff.applyActions(cur, inc, actions, key)
+      val (observedCur, oldObs) = counted(cur)
+      val (merged, newObs) = counted(Diff.applyActions(observedCur, inc, actions, key))
       val staged = sink.stage(merged, version)
-      val oldCount = cur.count()
-      val newCount = sink.readStaged(staged).count()
+      val oldCount = observedRows(oldObs)
+      val newCount = observedRows(newObs)
       val (err, _) = toleranceCheck(oldCount, newCount, tolError, tolWarning)
       if (err) {
         sink.discard(staged)
@@ -267,10 +311,7 @@ object Loader {
         LoadStats(tableName, n("I"), n("U") + n("X"), n("0"), n("D"),
           aborted = false, "", details, warnings)
       }
-    } finally {
-      actions.unpersist()
-      inc.unpersist()
-    }
+    } finally inc.unpersist()
   }
 
   /** E3: level-0 applied as a diff (`full-incremental`, and the `l5_is_full`
@@ -304,6 +345,12 @@ object Loader {
       .map { case (_, df, _) => BdeFormat.selectValidColumns(df, cur.columns.toSeq) }
       .reduce(_ unionByName _)
     val actions = Diff.fullDiff(cur, next, key).cache()
+    // the old and new row counts are observed metrics of the staged write
+    // (as in level0Replace): no recount of `cur`, no re-read of the staged
+    // version. A first load has no published version to count.
+    val (observedCur, oldObs) =
+      if (sink.exists) { val (d, o) = counted(cur); (d, Some(o)) }
+      else (cur, None)
     val staged = try {
       val counts = actions.groupBy("action").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -313,12 +360,13 @@ object Loader {
       // breach. The snapshot is NOT cached: at 100 TB caching it would
       // spill a full copy to executor disks.
       enforceBudget(files.zip(parts.map(_._3)), maxFileErrors)
-      (sink.stage(Diff.applyActions(cur, next, actions, key), version), counts)
+      val (merged, newObs) = counted(Diff.applyActions(observedCur, next, actions, key))
+      (sink.stage(merged, version), counts, newObs)
     } finally actions.unpersist() // the staged write was its last consumer
-    val (stagedName, counts) = staged
+    val (stagedName, counts, newObs) = staged
     def n(a: String) = counts.getOrElse(a, 0L)
-    val oldCount = cur.count()
-    val newCount = sink.readStaged(stagedName).count()
+    val oldCount = oldObs.fold(0L)(observedRows)
+    val newCount = observedRows(newObs)
     val (errBreach, _) = toleranceCheck(oldCount, newCount, tolError, tolWarning)
     if (errBreach) {
       sink.discard(stagedName)

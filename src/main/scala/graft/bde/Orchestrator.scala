@@ -1,5 +1,7 @@
 package graft.bde
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -215,13 +217,21 @@ object Orchestrator {
               0, 0, 0, 0, s"missing: ${p.missing.mkString(",")}")
         } else {
           // the change table applies only to level-5 change-driven tables
-          val changeTable: Option[DataFrame] =
+          val changeFiles: Option[DataFrame] =
             if (p.level == "5" && tables.exists(t =>
                 t.appliesToLevel("5") && !t.level5IsFull))
               changeDef.map(cd => cd.files
                 .map(f => BdeFormat.readFile(spark, s"${p.path}/$f.crs"))
                 .reduce(_ unionByName _))
             else None
+          // The day's change set, collected once per dataset into a
+          // driver-local relation: each table's loader takes its keys from
+          // it without a Spark job or another scan of the file. Lazy, so a
+          // data error fails the tables that read it, as a per-table scan did.
+          lazy val changeTable: Option[DataFrame] = changeFiles.map { chg =>
+            val keys = chg.select("tablename", "tablekeyvalue")
+            spark.createDataFrame(keys.collect().toSeq.asJava, keys.schema)
+          }
           def processTable(t: Catalog.TableDef): Option[TableOutcome] = {
             timeout.check()
             // the shared dataset sequence is the floor across tables; each

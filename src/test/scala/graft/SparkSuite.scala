@@ -9,6 +9,14 @@ object SparkSuite {
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
+    // Every broadcast hash relation allocates one Tungsten page on the
+    // driver, sized from the heap (64 MB at -Xmx7g) and held in the block
+    // store until the broadcast is cleaned. The suites broadcast hundreds of
+    // few-row change sets, and 8 forked test JVMs share one host's memory:
+    // on a 4-core, 16 GB host a 2 MB page cut the summed peak RSS of three
+    // concurrent groups (-Xmx7g each) from 9.4 to 6.8 GB.
+    // Records larger than a page still get a page of their own.
+    .config("spark.buffer.pageSize", "2m")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")

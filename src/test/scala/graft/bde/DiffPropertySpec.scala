@@ -1,5 +1,7 @@
 package graft.bde
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -93,6 +95,79 @@ class DiffPropertySpec extends SparkSuite {
       val appliedNone = materialize(Diff.applyActions(curDf, nextDf, none, "k"))
       (appliedFull == next) :| s"full change set must land on b: $appliedFull" &&
         (appliedNone == cur) :| s"empty change set must be a no-op: $appliedNone"
+    })
+  }
+
+  // ---- level-5 loader vs the reference composition ----------------------
+
+  private type URow = (Option[String], String) // (unique code, value)
+
+  /** Rows for `keys` whose unique codes come from a pool of 6, each used
+    * at most once, or NULL (any number of NULLs, as a unique constraint
+    * allows). The small pool makes codes collide across the current table
+    * and the increment: swapped and orphaned unique values. */
+  private def genURows(keys: Seq[Long]): Gen[Map[Long, URow]] = for {
+    order <- Gen.listOfN(6, Gen.choose(0, 1 << 20))
+    nulls <- Gen.listOfN(keys.size, Gen.prob(0.25))
+    vals <- Gen.listOfN(keys.size, Gen.oneOf("x", "y", "z"))
+  } yield {
+    val codes = (1 to 6).map(i => s"c$i").zip(order).sortBy(_._2).map(_._1)
+    keys.zipWithIndex.map { case (k, i) =>
+      k -> ((if (i >= codes.size || nulls(i)) None else Some(codes(i))), vals(i))
+    }.toMap
+  }
+
+  /** (cur, increment, change keys): keys 1..8 may be current, 5..12 may be
+    * in the increment, 13..14 are in neither; the change list repeats keys
+    * and may be empty. */
+  private val genLevel5: Gen[(Map[Long, URow], Map[Long, URow], List[Long])] = for {
+    curKeys <- Gen.someOf(1L to 8L)
+    incKeys <- Gen.someOf(5L to 12L)
+    cur <- genURows(curKeys.toSeq)
+    inc <- genURows(incKeys.toSeq)
+    chg <- Gen.frequency(1 -> Gen.const(Nil), 6 -> Gen.listOf(Gen.choose(1L, 14L)))
+  } yield (cur, inc, chg)
+
+  private def urowsDf(t: Map[Long, URow]): DataFrame =
+    t.toSeq.map { case (k, (u, v)) => (k, u.orNull, v) }.toDF("k", "u", "v")
+
+  private def materializeU(d: DataFrame): Map[Long, URow] =
+    d.collect().map(r => r.getLong(0) -> (Option(r.getString(1)), r.getString(2))).toMap
+
+  test("level5Apply matches classifyChanges(repairKeySwaps = true) + applyActions") {
+    val cols = Seq("k" -> "bigint", "u" -> "varchar", "v" -> "varchar")
+    val changeCols = Seq("id" -> "integer", "tablename" -> "varchar",
+      "tablekeyvalue" -> "bigint", "action" -> "char")
+    run(Prop.forAllNoShrink(genLevel5) { case (cur, inc, chg) =>
+      val dir = Files.createTempDirectory("l5-prop")
+      val sink = new ParquetTableSink(spark, dir.resolve("tables").toString, "t_prop")
+      sink.replace(urowsDf(cur), "1")
+      val incFile = dir.resolve("inc.crs")
+      Files.writeString(incFile, OrchestratorScenario.crs("t_prop", cols,
+        inc.toSeq.map { case (k, (u, v)) => s"$k|${u.getOrElse("")}|$v|" }))
+      // a row for another table must be filtered out
+      val chgFile = dir.resolve("chg.crs")
+      Files.writeString(chgFile, OrchestratorScenario.crs("xchg", changeCols,
+        "1|t_other|3|U|" +:
+          chg.zipWithIndex.map { case (k, i) => s"${i + 2}|T_PROP|$k|U|" }))
+
+      val curDf = sink.read()
+      val incDf = BdeFormat.readFile(spark, incFile.toString)
+      val refActions = Diff.classifyChanges(curDf, incDf, chg.toDF("k"), "k",
+        uniqueCols = Seq("u"), repairKeySwaps = true)
+      val refCounts = refActions.collect().groupMapReduce(_.getString(1))(_ => 1L)(_ + _)
+      def n(a: String) = refCounts.getOrElse(a, 0L)
+      val refRows = materializeU(Diff.applyActions(curDf, incDf, refActions, "k"))
+
+      val s = Loader.level5Apply(spark, sink, Seq(incFile.toString),
+        L5Slice.localChanges(spark, chgFile.toString),
+        "t_prop", "k", "2", uniqueCols = Seq("u"), maxFileErrors = Some(0))
+      val loaded = materializeU(sink.read())
+      val stats = (s.ninsert, s.nupdate, s.nnullupdate, s.ndelete)
+      val refStats = (n("I"), n("U") + n("X"), n("0"), n("D"))
+      (loaded == refRows) :| s"rows: $loaded vs $refRows (cur $cur, inc $inc, chg $chg)" &&
+        (stats == refStats) :| s"stats: $stats vs $refStats (cur $cur, inc $inc, chg $chg)" &&
+        (!s.aborted) :| "no tolerance set: never aborts"
     })
   }
 }

@@ -201,4 +201,22 @@ class JdbcSinkSpec extends SparkSuite {
     assert(sink.read().count() == 3) // still the level-0 version
     assert(sink.currentVersion.exists(_.endsWith(E2E.L0Dataset)))
   }
+
+  test("level-5 apply through the JDBC sink: counts observed on the staged write") {
+    val dir = Files.createTempDirectory("jdbc-l5")
+    val sink = new JdbcTableSink(spark, derbyUrl(), L5Slice.Table)
+    L5Slice.loadLevel0(spark, sink, dir)
+    val inc = L5Slice.dataFile(dir, "l5.crs", L5Slice.l5Rows)
+    val chg = L5Slice.localChanges(spark, L5Slice.changeFile(dir, L5Slice.changes))
+    // error tolerance 1.0: 5 new rows pass against 3 old rows, so the gate
+    // read both observed counts
+    val stats = Loader.level5Apply(spark, sink, Seq(inc), chg, L5Slice.Table,
+      L5Slice.Key, L5Slice.L5Version, uniqueCols = Seq("lin_id"),
+      tolError = Some(1.0))
+    assert((stats.ninsert, stats.nupdate, stats.nnullupdate, stats.ndelete)
+      == (3L, 2L, 0L, 1L))
+    assert(!stats.aborted)
+    assert(sink.read().orderBy(L5Slice.Key).collect().map(_.getInt(4)).toSeq
+      == L5Slice.finalKeys)
+  }
 }

@@ -1,14 +1,42 @@
 package graft.bde
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
 
 import graft.SparkSuite
 
 /** End-to-end slice + sink atomicity (mirrors t/linz_bde_uploader.t:1176-1221). */
-class LoaderSpec extends SparkSuite {
+class LoaderSpec extends SparkSuite with TimeLimits {
   import spark.implicits._
+
+  // `Observation.get` blocks forever when no action evaluated the observed
+  // scan: the level-5 tests below run under `failAfter`, and the signaler
+  // interrupts a blocked load instead of hanging the suite
+  implicit val signaler: Signaler = ThreadSignaler
+
+  /** A published level-0 slice version under a fresh root. */
+  private def loadedSlice(): (Path, ParquetTableSink) = {
+    val dir = Files.createTempDirectory("l5-slice")
+    val sink = new ParquetTableSink(spark, dir.resolve("tables").toString,
+      L5Slice.Table)
+    L5Slice.loadLevel0(spark, sink, dir)
+    (dir, sink)
+  }
+
+  private def stats(s: Loader.LoadStats) =
+    (s.ninsert, s.nupdate, s.nnullupdate, s.ndelete)
+
+  private def rows(d: DataFrame) =
+    d.orderBy(L5Slice.Key).collect().map(_.toSeq).toSeq
 
   test("sink: stage-then-publish is atomic; discard leaves current version") {
     val root = Files.createTempDirectory("sink-spec").toString
@@ -162,5 +190,102 @@ class LoaderSpec extends SparkSuite {
       "other_table", "audit_id", "20170629000000")
     assert((stats.ninsert, stats.nupdate, stats.ndelete) == (0L, 0L, 0L))
     assert(sink.read().count() == 3)
+  }
+
+  test("level-5 gate order: the file-error budget fails a table with no change keys") {
+    failAfter(2.minutes) {
+      val (dir, sink) = loadedSlice()
+      // two malformed rows against a budget of one, and no change key for
+      // this table: the budget still gates before the zero-key early exit
+      val inc = L5Slice.dataFile(dir, "l5.crs",
+        L5Slice.l5Rows ++ Seq("1|2|", "1|2|3|4|5|6|"))
+      val chg = L5Slice.localChanges(spark,
+        L5Slice.changeFile(dir, L5Slice.changes, table = "other_table"))
+      val e = intercept[IllegalStateException](
+        Loader.level5Apply(spark, sink, Seq(inc), chg, L5Slice.Table, L5Slice.Key,
+          L5Slice.L5Version, maxFileErrors = Some(1)))
+      assert(e.getMessage.contains("2 malformed rows exceed max_file_errors=1"))
+      assert(sink.currentVersion.contains(s"v_${L5Slice.L0Version}"))
+    }
+  }
+
+  test("level-5: change keys in neither the table nor the increment change nothing") {
+    failAfter(2.minutes) {
+      val (dir, sink) = loadedSlice()
+      val before = rows(sink.read())
+      val chg = L5Slice.localChanges(spark,
+        L5Slice.changeFile(dir, Seq(7 -> "U", 8 -> "D")))
+      val s = Loader.level5Apply(spark, sink,
+        Seq(L5Slice.dataFile(dir, "l5.crs", L5Slice.l5Rows)), chg, L5Slice.Table,
+        L5Slice.Key, L5Slice.L5Version, uniqueCols = Seq("lin_id"),
+        tolError = Some(0.95), maxFileErrors = Some(0))
+      assert(stats(s) == ((0L, 0L, 0L, 0L)))
+      assert(!s.aborted)
+      assert(rows(sink.read()) == before)
+    }
+  }
+
+  test("level-5 load runs a bounded number of Spark jobs and never re-reads the staged version") {
+    failAfter(3.minutes) {
+      val (dir, sink) = loadedSlice()
+      val inc = L5Slice.dataFile(dir, "l5.crs", L5Slice.l5Rows)
+      val chg = L5Slice.localChanges(spark,
+        L5Slice.changeFile(dir, L5Slice.changes))
+      val marker = "level5-job-count-marker"
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          jobs.add(Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .getOrElse(""))
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+          case _ =>
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val s = try {
+        val s = Loader.level5Apply(spark, sink, Seq(inc), chg, L5Slice.Table,
+          L5Slice.Key, L5Slice.L5Version, uniqueCols = Seq("lin_id"),
+          tolError = Some(0.20), tolWarning = Some(0.95), maxFileErrors = Some(0))
+        // listener events arrive in order: once the marker job is seen, every
+        // job of the load has been counted
+        spark.sparkContext.setJobDescription(marker)
+        try spark.sparkContext.parallelize(Seq(1), 1).count()
+        finally spark.sparkContext.setJobDescription(null)
+        while (!jobs.contains(marker)) Thread.sleep(20)
+        s
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(stats(s) == ((3L, 2L, 0L, 1L)))
+      val loadJobs = jobs.asScala.takeWhile(_ != marker).size
+      // the change-set-sized sets are collected once and broadcast from the
+      // driver; the counts ride on the staged write. A bare count() or a
+      // second classification pass pushes this over the bound.
+      assert(loadJobs <= 15, s"level-5 load ran $loadJobs Spark jobs")
+      def scans(p: SparkPlanInfo): Seq[String] =
+        p.metadata.get("Location").toSeq ++ p.children.flatMap(scans)
+      val stagedScans = plans.asScala.toSeq.flatMap(scans)
+        .filter(_.contains(s"v_${L5Slice.L5Version}"))
+      assert(stagedScans.isEmpty, s"the staged version was re-read: $stagedScans")
+      assert(rows(sink.read()).map(_.last) == L5Slice.finalKeys)
+    }
+  }
+
+  test("level-5 tolerance abort on the observed counts discards the staged version") {
+    failAfter(2.minutes) {
+      val (dir, sink) = loadedSlice()
+      // the delete alone leaves 2 of 3 rows: below ceil(3 * 0.95)
+      val chg = L5Slice.localChanges(spark,
+        L5Slice.changeFile(dir, Seq(80401150 -> "D")))
+      val s = Loader.level5Apply(spark, sink,
+        Seq(L5Slice.dataFile(dir, "l5.crs", L5Slice.l5Rows)), chg, L5Slice.Table,
+        L5Slice.Key, L5Slice.L5Version, tolError = Some(0.95))
+      assert(s.aborted)
+      assert(s.abortReason == "table count 2 below error tolerance of old count 3")
+      assert(stats(s) == ((0L, 0L, 0L, 1L)))
+      assert(sink.currentVersion.contains(s"v_${L5Slice.L0Version}"))
+      assert(!Files.exists(dir.resolve(s"tables/${L5Slice.Table}/v_${L5Slice.L5Version}")))
+    }
   }
 }
