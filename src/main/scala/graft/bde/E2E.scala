@@ -1,7 +1,7 @@
 package graft.bde
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -15,8 +15,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * assertion set (`t/linz_bde_uploader.t:1176-1221`): final table = 5 exact
  * rows, stats = (ninsert=3, nupdate=2, nnullupdate=0, ndelete=1).
  *
- * Fixtures are read from the reference checkout at runtime (data files, not
- * code); the staged repository tree mirrors the reference layout
+ * The slice's `pab1.crs` and `xaud.crs` are rendered from the fixtures'
+ * rows kept here (the rows the `s3_bde_read`/`s3_change_read` oracles pin,
+ * under the reference files' header END times), so the slice runs without
+ * the reference checkout; only the `s3_*` reader rows read [[FixtureDir]],
+ * because they test the reader against those exact bytes. The staged
+ * repository tree mirrors the reference layout
  * (`level_0/YYYYMMDDhhmmss/...`, README.md:159-161).
  */
 object E2E {
@@ -26,6 +30,32 @@ object E2E {
   val KeyColumn = "audit_id"          // conf/tables.conf:168
   val L0Dataset = "20160601000000"
   val L5Dataset = "20170629000000"    // t/linz_bde_uploader.t:1057
+
+  /** `pab1.crs`'s data rows (t/data/pab1.crs:17-19). */
+  val Pab1Rows = Seq("4457326|3|11960041|Y|80401150|",
+    "4457327|2|29694578|N|80401149|", "4457328|1|29694591|Y|80401148|")
+  /** `xaud.crs`'s (tablekeyvalue, action) pairs in id order
+    * (t/data/xaud.crs:17-22). */
+  val XaudChanges = Seq(80401150 -> "D", 300 -> "I", 400 -> "I", 100 -> "I",
+    80401148 -> "U", 80401149 -> "U")
+
+  /** `pab1.crs` holding `rows`: the fixture's columns and header times. */
+  def pab1(rows: Seq[String] = Pab1Rows): String =
+    OrchestratorScenario.crs(TableName, Seq("pri_id" -> "integer",
+      "sequence" -> "integer", "lin_id" -> "integer", "reversed" -> "char",
+      "audit_id" -> "integer"), rows,
+      start = "2016-06-01 17:12:25", end = "2016-06-01 17:12:25")
+
+  /** `xaud.crs` holding `changes` to `table`, all stamped at the fixture's
+    * change time. */
+  def xaud(changes: Seq[(Int, String)] = XaudChanges,
+      table: String = TableName): String =
+    OrchestratorScenario.crs("l5_change_table", Seq("id" -> "integer",
+      "tablename" -> "varchar", "tablekeyvalue" -> "integer",
+      "action" -> "char", "timestamp" -> "datetime"),
+      changes.zipWithIndex.map { case ((k, a), i) =>
+        s"${i + 1}|$table|$k|$a|2016-06-01 17:12:17|" },
+      start = "2016-06-01 17:12:46", end = "2016-06-01 17:12:46")
 
   /** The reference test's level-5 fixture mutation
     * (t/linz_bde_uploader.t:1062-1075): append two rows, then per line
@@ -55,11 +85,9 @@ object E2E {
     val l5Dir = root.resolve(s"repo/level_5/$L5Dataset")
     Files.createDirectories(l0Dir)
     Files.createDirectories(l5Dir)
-    val pab1 = Files.readString(Paths.get(FixtureDir, "pab1.crs"), StandardCharsets.UTF_8)
-    val xaud = Files.readString(Paths.get(FixtureDir, "xaud.crs"), StandardCharsets.UTF_8)
-    Files.writeString(l0Dir.resolve("pab1.crs"), pab1, StandardCharsets.UTF_8)
-    Files.writeString(l5Dir.resolve("pab1.crs"), mutateLevel5(pab1), StandardCharsets.UTF_8)
-    Files.writeString(l5Dir.resolve("xaud.crs"), xaud, StandardCharsets.UTF_8)
+    Files.writeString(l0Dir.resolve("pab1.crs"), pab1(), StandardCharsets.UTF_8)
+    Files.writeString(l5Dir.resolve("pab1.crs"), mutateLevel5(pab1()), StandardCharsets.UTF_8)
+    Files.writeString(l5Dir.resolve("xaud.crs"), xaud(), StandardCharsets.UTF_8)
     Staged(root,
       l0Dir.resolve("pab1.crs").toString,
       l5Dir.resolve("pab1.crs").toString,
@@ -78,8 +106,7 @@ object E2E {
       l0Rows: DataFrame,
       finalRows: DataFrame,
       stats: Loader.LoadStats,
-      control: Control,
-      l5Header: BdeFormat.BdeHeader)
+      control: Control)
 
   // The slice is a deterministic fixed-cost fixture replay (fixed clock,
   // fixed inputs) consumed by SIX registered queries; memoizing per session
@@ -116,7 +143,6 @@ object E2E {
     // ---- job 2: level-5 increment (E2) ----
     val upl2 = control.createUpload("bde").toOption.get
     val changeTable = BdeFormat.readFile(spark, st.changeFile)
-    val h5 = BdeFormat.parseHeader(spark, st.l5File)
 
     // L5 start-time continuity check: the loader enforces the new START
     // against the previous LEVEL-5 upload's recorded END times (none here —
@@ -137,7 +163,7 @@ object E2E {
       nnullupdate = stats.nnullupdate, ndelete = stats.ndelete)
     control.finishUpload(upl2, ok = !stats.aborted)
 
-    SliceResult(l0Rows, sink.read(), stats, control, h5)
+    SliceResult(l0Rows, sink.read(), stats, control)
   }
 
   /**

@@ -8,21 +8,19 @@ import org.apache.spark.sql.types.StructType
 
 /**
  * E1/E2/E3 — the load paths, wiring reader → cleanser → projection → diff →
- * sink → stats (SURVEY §3):
+ * sink → stats (SURVEY §3). Every load is one path: the shared read step
+ * ([[TableFiles]]), what the load computes, and the shared commit step
+ * ([[commit]]: stage → gate → publish or discard). The loads differ only
+ * in the middle:
  *
  *  - [[level0Replace]]  = E1, `bde_ApplyLevel0Update` non-incremental arm
- *    (sql:1949-1973): truncate-and-replace via staged publish.
+ *    (sql:1949-1973): the union itself is the new version (truncate and
+ *    replace); its gate is the file-error budget, with no tolerance.
  *  - [[level5Apply]]    = E2, `bde_ApplyLevel5Update` (sql:1576-1818):
- *    change-table-driven classify → apply → tolerance gate → publish.
+ *    change-table-driven classify, then apply.
  *  - [[level0Incremental]] = E3 (sql:1887-1948): full-outer diff of the new
- *    snapshot vs current, applied through the same merge path (also the
- *    `l5_is_full` arm — a level-5 dataset whose files are full snapshots).
- *
- * Multi-file tables load every configured file (the reference's per-file
- * loop, lib/LINZ/BdeUpload.pm:886-890,966) and union the frames before the
- * single apply. `COLUMN` catalog overrides REPLACE the file header's
- * columns (lib/LINZ/BdeUpload.pm:185-188). The row cleanser runs inside
- * the same scan (pure column expressions).
+ *    snapshot vs current, then the same apply (also the `l5_is_full` arm —
+ *    a level-5 dataset whose files are full snapshots).
  *
  * The row-count tolerance check is an ABORT GATE exactly as in the
  * reference (`_bde_CheckTableCount`, sql:2006-2085, called before the
@@ -30,7 +28,9 @@ import org.apache.spark.sql.types.StructType
  * discarded and the published version is untouched. The file-error budget
  * (`max_file_errors`, conf/linz_bde_uploader.conf:370-376) aborts the
  * table when malformed rows exceed it; within budget, malformed rows are
- * dropped and counted, as bde_copy does.
+ * dropped and counted, as bde_copy does. Each load checks the budget
+ * first, then (level 5) exits early on zero change keys, then applies the
+ * tolerance; nothing is published after a budget breach.
  */
 object Loader {
 
@@ -53,10 +53,6 @@ object Loader {
 
   private def tsString(t: Option[java.sql.Timestamp]): String =
     t.map(_.toString.stripSuffix(".0")).getOrElse("")
-
-  /** Build the F10 details string for a load from its files' parsed headers. */
-  private def buildDetails(files: Seq[String], headers: Seq[BdeFormat.BdeHeader]): String =
-    Control.buildDetails(files.map(fileKey).zip(headers.map(h => tsString(h.endTime))))
 
   /**
    * L5 start-time continuity enforcement (lib/LINZ/BdeUpload.pm:944-958 +
@@ -124,47 +120,107 @@ object Loader {
   private def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
-  /** Read one file with header-or-override schema; when a file-error budget
-    * is set, malformed rows are dropped AND counted in the same scan (the
-    * returned Observation's `malformed` metric — see [[enforceBudget]]). */
-  private def readCleaned(
+  /** The read step all three loads share: every configured file (the
+    * reference's per-file loop, lib/LINZ/BdeUpload.pm:886-890,966), read
+    * with its header-or-override schema (`COLUMN` catalog overrides replace
+    * the header's columns, :185-188) and cleaned inside the same scan. When a
+    * file-error budget is set, malformed rows are dropped AND counted in
+    * that scan (one `malformed` observation per file — see
+    * [[enforceBudget]]). */
+  private final class TableFiles(
       spark: SparkSession,
-      file: String,
+      files: Seq[String],
       columnOverrides: Seq[BdeFormat.BdeColumn],
       clean: DataFrame => DataFrame,
-      maxFileErrors: Option[Long]): (BdeFormat.BdeHeader, DataFrame, Option[Observation]) = {
-    val parsed = BdeFormat.parseHeader(spark, file)
-    val header =
-      if (columnOverrides.nonEmpty) parsed.copy(columns = columnOverrides)
-      else parsed
-    val obs = maxFileErrors.map(_ =>
-      Observation(s"graft_malformed_${obsId.incrementAndGet()}"))
-    val raw = BdeFormat.read(spark, file, header,
-      dropMalformed = maxFileErrors.isDefined, malformedObs = obs)
-    (header, clean(raw), obs)
-  }
+      maxFileErrors: Option[Long]) {
+    require(files.nonEmpty, "a table load needs at least one file")
+    private val parts = files.map { file =>
+      val parsed = BdeFormat.parseHeader(spark, file)
+      val header =
+        if (columnOverrides.nonEmpty) parsed.copy(columns = columnOverrides)
+        else parsed
+      val obs = maxFileErrors.map(_ =>
+        Observation(s"graft_malformed_${obsId.incrementAndGet()}"))
+      val raw = BdeFormat.read(spark, file, header,
+        dropMalformed = maxFileErrors.isDefined, malformedObs = obs)
+      (header, clean(raw), obs)
+    }
+    val headers: Seq[BdeFormat.BdeHeader] = parts.map(_._1)
 
-  /** Enforce the `max_file_errors` budget from the per-file observations.
-    * MUST be called after an action that evaluated each file's scan exactly
-    * once (`Observation.get` blocks until its first action completes, and a
-    * plan that evaluates the subtree twice would double-count). Throws on
-    * breach, exactly like the reference's bde_copy error-limit abort. */
-  private def enforceBudget(
-      parts: Seq[(String, Option[Observation])],
-      budget: Option[Long]): Unit =
-    budget.foreach { b =>
-      parts.foreach { case (file, obsOpt) =>
-        obsOpt.foreach { obs =>
-          val bad = obs.get("malformed").asInstanceOf[Long]
-          if (bad > b)
-            throw new IllegalStateException(
-              s"$file: $bad malformed rows exceed max_file_errors=$b")
+    /** The F10 details string for the load, built from the files' header
+      * END times. */
+    def details: String =
+      Control.buildDetails(files.map(fileKey).zip(headers.map(h => tsString(h.endTime))))
+
+    /** The union of the files, each projected to the table's `columns`
+      * first (`bde_SelectValidColumns`) when they are given. */
+    def rows(columns: Option[Seq[String]]): DataFrame =
+      parts
+        .map { case (_, df, _) => columns.fold(df)(BdeFormat.selectValidColumns(df, _)) }
+        .reduce(_ unionByName _)
+
+    /** Enforce the `max_file_errors` budget from the per-file observations.
+      * MUST be called after an action that evaluated each file's scan
+      * exactly once (`Observation.get` blocks until its first action
+      * completes, and a plan that evaluates the subtree twice would
+      * double-count). Throws on breach, exactly like the reference's
+      * bde_copy error-limit abort. */
+    def enforceBudget(): Unit =
+      maxFileErrors.foreach { b =>
+        files.zip(parts).foreach { case (file, (_, _, obsOpt)) =>
+          obsOpt.foreach { obs =>
+            val bad = obs.get("malformed").asInstanceOf[Long]
+            if (bad > b)
+              throw new IllegalStateException(
+                s"$file: $bad malformed rows exceed max_file_errors=$b")
+          }
         }
       }
-    }
+  }
 
-  /** E1: read the table's BDE files, clean, project to the target columns,
-    * publish the union as a full replacement version.
+  /**
+   * The commit step all three loads end in — the reference's apply →
+   * `_bde_CheckTableCount` → commit or roll back (sql:1770,1944,2006-2085):
+   * stage the new version, gate it, then publish it or discard it.
+   *
+   * `next` builds the new version from `old` as the merge reads it. When
+   * `old` is given, its row count is an observed metric of the staged write,
+   * as is the new row count, so the gate re-counts nothing and never re-reads
+   * the staged version. `checkStaged` runs after the write and before the
+   * gate (the level-0 replace's file-error budget, whose observations the
+   * write fires). A check that throws, or a row count below the error
+   * tolerance of the old count, discards the staged version: the published
+   * one is untouched. `stats` gets the new row count.
+   */
+  private def commit(
+      sink: TableSink,
+      version: String,
+      old: Option[DataFrame],
+      tolError: Option[Double] = None,
+      tolWarning: Option[Double] = None,
+      checkStaged: () => Unit = () => ())(
+      next: Option[DataFrame] => DataFrame)(
+      stats: Long => LoadStats): LoadStats = {
+    val oldCounted = old.map(counted)
+    val (rows, newObs) = counted(next(oldCounted.map(_._1)))
+    val staged = sink.stage(rows, version)
+    val gated =
+      try {
+        checkStaged()
+        val oldCount = oldCounted.fold(0L)(o => observedRows(o._2))
+        val newCount = observedRows(newObs)
+        val (err, _) = toleranceCheck(oldCount, newCount, tolError, tolWarning)
+        val s = stats(newCount)
+        if (err) s.copy(aborted = true, abortReason =
+          s"table count $newCount below error tolerance of old count $oldCount")
+        else s
+      } catch { case e: Throwable => sink.discard(staged); throw e }
+    if (gated.aborted) sink.discard(staged) else sink.publish(staged)
+    gated
+  }
+
+  /** E1: read the table's BDE files, clean, and publish their union as a
+    * full replacement version.
     *
     * ONE distributed pass: the staged write scans each file exactly once,
     * the published row count (`ninsert`) and the per-file malformed counts
@@ -176,25 +232,13 @@ object Loader {
       sink: TableSink,
       files: Seq[String],
       version: String,
-      tableColumns: Option[Seq[String]] = None,
       clean: DataFrame => DataFrame = identity,
       columnOverrides: Seq[BdeFormat.BdeColumn] = Nil,
       maxFileErrors: Option[Long] = None): LoadStats = {
-    require(files.nonEmpty, "level-0 load needs at least one file")
-    val parts = files.map(f =>
-      readCleaned(spark, f, columnOverrides, clean, maxFileErrors))
-    val projected = parts.map { case (_, df, _) =>
-      tableColumns
-        .map(cols => BdeFormat.selectValidColumns(df, cols))
-        .getOrElse(df)
-    }
-    val (rows, rowsObs) = counted(projected.reduce(_ unionByName _))
-    val staged = sink.stage(rows, version)
-    try enforceBudget(files.zip(parts.map(_._3)), maxFileErrors)
-    catch { case e: Throwable => sink.discard(staged); throw e }
-    sink.publish(staged)
-    LoadStats(sink.table, observedRows(rowsObs), 0, 0, 0,
-      aborted = false, "", buildDetails(files, parts.map(_._1)))
+    val read = new TableFiles(spark, files, columnOverrides, clean, maxFileErrors)
+    commit(sink, version, old = None, checkStaged = () => read.enforceBudget())(
+      _ => read.rows(None))(
+      n => LoadStats(sink.table, n, 0, 0, 0, aborted = false, "", read.details))
   }
 
   /**
@@ -202,9 +246,9 @@ object Loader {
    * tablekeyvalue, action, timestamp — `bde_CreateL5ChangeTable`,
    * sql:1420-1461) is filtered to this table (P4, sql:1695-1708), the
    * working copy (union of the table's increment files) classified against
-   * the current version (J1-J3+J5), merged, tolerance-gated, and published;
-   * stats mirror `_ver_apply_changes` + the null-update count
-   * (sql:1757-1765).
+   * the current version (J1-J3+J5), merged, and committed through the
+   * tolerance gate; stats mirror `_ver_apply_changes` + the null-update
+   * count (sql:1757-1765).
    *
    * The reference pre-filters and indexes the change keys once per table
    * and counts rows with `GET DIAGNOSTICS ROW_COUNT` (sql:1689-1717,
@@ -215,11 +259,9 @@ object Loader {
    * bounded by the day's delta, never by the table. Passed on as local
    * relations they broadcast from the driver without recomputing anything,
    * and the I/U/0/X/D stats are counted there. `cur`, the increment rows
-   * and the merge stay distributed. The old and new row counts for the
-   * tolerance gate are observed metrics of the staged write, so nothing
-   * re-counts `cur` or re-reads the staged version. Given a driver-local
-   * `changeTable` (as [[Orchestrator]] passes it), taking this table's keys
-   * runs no Spark job either.
+   * and the merge stay distributed. Given a driver-local `changeTable` (as
+   * [[Orchestrator]] passes it), taking this table's keys runs no Spark job
+   * either.
    */
   def level5Apply(
       spark: SparkSession,
@@ -240,31 +282,24 @@ object Loader {
       prevDetails: Map[String, String] = Map.empty,
       continuityWarnHours: Double = 0,
       continuityFailHours: Double = 0): LoadStats = {
-    require(files.nonEmpty, "level-5 load needs at least one file")
+    val read = new TableFiles(spark, files, columnOverrides, clean, maxFileErrors)
     val cur = sink.read()
-    val parts = files
-      .map(f => readCleaned(spark, f, columnOverrides, clean, maxFileErrors))
-    val headers = parts.map(_._1)
-    val warnings = checkContinuity(files, headers, prevDetails,
+    val warnings = checkContinuity(files, read.headers, prevDetails,
       continuityWarnHours, continuityFailHours)
-    val details = buildDetails(files, headers)
     // The increment is change-set-sized (a daily delta, never the big
     // table) and is consumed by the key-swap repair, the classifier and the
     // merge — cache it so the files are scanned once for the whole load.
     // One try/finally releases it on EVERY exit — returns, aborts, and
     // exceptions from any stage (a failing table otherwise pins its cache
     // for the rest of a 94-table run).
-    val inc = parts
-      .map { case (_, df, _) => BdeFormat.selectValidColumns(df, cur.columns.toSeq) }
-      .reduce(_ unionByName _)
-      .cache()
+    val inc = read.rows(Some(cur.columns.toSeq)).cache()
     try {
       if (maxFileErrors.isDefined) {
         // one materializing action = each file scanned exactly once; the
         // malformed observations fire here and the budget gates before any
         // classify/merge work runs
         inc.count()
-        enforceBudget(files.zip(parts.map(_._3)), maxFileErrors)
+        read.enforceBudget()
       }
 
       // P4: this table's distinct change keys (case-insensitive table
@@ -277,7 +312,7 @@ object Loader {
       // early exit on zero changes (sql:1713,1771-1773)
       if (chgRows.isEmpty)
         return LoadStats(tableName, 0, 0, 0, 0, aborted = false, "",
-          details, warnings)
+          read.details, warnings)
       val chg = local(spark, chgRows, chgDf.schema)
       // J5 once, collected: the classifier then runs on the repaired keys
       // without repeating the repair
@@ -293,31 +328,17 @@ object Loader {
       val actions = local(spark, actionRows, classified.schema)
       val counts = actionRows.groupMapReduce(_.getString(1))(_ => 1L)(_ + _)
       def n(a: String) = counts.getOrElse(a, 0L)
-
-      val (observedCur, oldObs) = counted(cur)
-      val (merged, newObs) = counted(Diff.applyActions(observedCur, inc, actions, key))
-      val staged = sink.stage(merged, version)
-      val oldCount = observedRows(oldObs)
-      val newCount = observedRows(newObs)
-      val (err, _) = toleranceCheck(oldCount, newCount, tolError, tolWarning)
-      if (err) {
-        sink.discard(staged)
-        LoadStats(tableName, n("I"), n("U") + n("X"), n("0"), n("D"),
-          aborted = true,
-          s"table count $newCount below error tolerance of old count $oldCount",
-          details, warnings)
-      } else {
-        sink.publish(staged)
-        LoadStats(tableName, n("I"), n("U") + n("X"), n("0"), n("D"),
-          aborted = false, "", details, warnings)
-      }
+      commit(sink, version, Some(cur), tolError, tolWarning)(
+        old => Diff.applyActions(old.getOrElse(cur), inc, actions, key))(
+        _ => LoadStats(tableName, n("I"), n("U") + n("X"), n("0"), n("D"),
+          aborted = false, "", read.details, warnings))
     } finally inc.unpersist()
   }
 
   /** E3: level-0 applied as a diff (`full-incremental`, and the `l5_is_full`
-    * table mode): classify via [[Diff.fullDiff]] then merge through the same
-    * staged publish + tolerance gate as E2 (the reference's incremental arm
-    * also tolerance-checks, sql:1944). */
+    * table mode): classify via [[Diff.fullDiff]], then commit through the
+    * same tolerance gate as E2 (the reference's incremental arm also
+    * tolerance-checks, sql:1944). */
   def level0Incremental(
       spark: SparkSession,
       sink: TableSink,
@@ -329,54 +350,31 @@ object Loader {
       tolError: Option[Double] = None,
       tolWarning: Option[Double] = None,
       maxFileErrors: Option[Long] = None): LoadStats = {
-    require(files.nonEmpty, "level-0 incremental load needs at least one file")
-    val parts = files
-      .map(f => readCleaned(spark, f, columnOverrides, clean, maxFileErrors))
-    // First-ever load: the reference's table always exists (possibly empty),
-    // so its incremental arm degrades to all-inserts; diff against an empty
-    // frame with the snapshot's schema gives the same result here.
-    val cur =
-      if (sink.exists) sink.read()
-      else parts.map(_._2).reduce(_ unionByName _).limit(0)
+    val read = new TableFiles(spark, files, columnOverrides, clean, maxFileErrors)
     // no continuity check: the reference treats l5_is_full / full-incremental
     // as a level-0 load ($is_level0, lib/LINZ/BdeUpload.pm:926,944-947)
-    val details = buildDetails(files, parts.map(_._1))
-    val next = parts
-      .map { case (_, df, _) => BdeFormat.selectValidColumns(df, cur.columns.toSeq) }
-      .reduce(_ unionByName _)
-    val actions = Diff.fullDiff(cur, next, key).cache()
-    // the old and new row counts are observed metrics of the staged write
-    // (as in level0Replace): no recount of `cur`, no re-read of the staged
-    // version. A first load has no published version to count.
-    val (observedCur, oldObs) =
-      if (sink.exists) { val (d, o) = counted(cur); (d, Some(o)) }
-      else (cur, None)
-    val staged = try {
+    val cur = if (sink.exists) Some(sink.read()) else None
+    val next = read.rows(cur.map(_.columns.toSeq))
+    // First-ever load: the reference's table always exists (possibly empty),
+    // so its incremental arm degrades to all-inserts; diff against an empty
+    // frame with the snapshot's schema gives the same result here. A first
+    // load has no published version to count.
+    val base = cur.getOrElse(next.limit(0))
+    val actions = Diff.fullDiff(base, next, key).cache()
+    try {
       val counts = actions.groupBy("action").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
+      def n(a: String) = counts.getOrElse(a, 0L)
       // The collect above materialized the cached diff, scanning each
       // snapshot file exactly once (fullDiff references `next` once) — the
       // malformed observations are now final, and nothing is staged yet on
       // breach. The snapshot is NOT cached: at 100 TB caching it would
       // spill a full copy to executor disks.
-      enforceBudget(files.zip(parts.map(_._3)), maxFileErrors)
-      val (merged, newObs) = counted(Diff.applyActions(observedCur, next, actions, key))
-      (sink.stage(merged, version), counts, newObs)
-    } finally actions.unpersist() // the staged write was its last consumer
-    val (stagedName, counts, newObs) = staged
-    def n(a: String) = counts.getOrElse(a, 0L)
-    val oldCount = oldObs.fold(0L)(observedRows)
-    val newCount = observedRows(newObs)
-    val (errBreach, _) = toleranceCheck(oldCount, newCount, tolError, tolWarning)
-    if (errBreach) {
-      sink.discard(stagedName)
-      LoadStats(sink.table, n("I"), n("U"), 0, n("D"), aborted = true,
-        s"table count $newCount below error tolerance of old count $oldCount",
-        details)
-    } else {
-      sink.publish(stagedName)
-      LoadStats(sink.table, n("I"), n("U"), 0, n("D"), aborted = false, "",
-        details)
-    }
+      read.enforceBudget()
+      commit(sink, version, cur, tolError, tolWarning)(
+        old => Diff.applyActions(old.getOrElse(base), next, actions, key))(
+        _ => LoadStats(sink.table, n("I"), n("U"), 0, n("D"), aborted = false,
+          "", read.details))
+    } finally actions.unpersist()
   }
 }

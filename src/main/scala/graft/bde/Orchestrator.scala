@@ -21,8 +21,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *  - EVERY file of a multi-file table loads (the reference's per-file loop,
  *    lib:886-890,966), and every production frame passes through the
  *    configured cleanser and `COLUMN` catalog overrides;
- *  - `l5_is_full` tables route their level-5 datasets through the
- *    full-snapshot diff path (E3) instead of the change-table path;
+ *  - one arm per table picks the [[Loader]] entry point from the dataset
+ *    level, `-full-incremental` and the table's `l5_is_full` flag (the
+ *    full-snapshot diff (E3) for `l5_is_full` tables and under
+ *    `-full-incremental`, else the change table for level 5 and replace for
+ *    level 0), turns an abort into a table failure and records the load
+ *    once;
  *  - an INCOMPLETE level-5 dataset is skipped with per-table warnings
  *    BEFORE any file is opened (lib:691-702); an incomplete level-0 aborts
  *    the run and the job finishes in error;
@@ -255,44 +259,12 @@ object Orchestrator {
                   if (p.level == "5" && !sink.exists)
                     throw new IllegalStateException(
                       s"no level-0 load of ${t.name} before level-5 increment")
+                  val key = t.key.getOrElse("id")
+                  // is_incremental = apply_level0_inc || level5_is_full, and
+                  // every level 5 is incremental (lib/LINZ/BdeUpload.pm:961,980)
+                  val incremental = p.level == "5" || level0AsDiff || t.level5IsFull
                   val stats =
-                    if (p.level == "0") {
-                      // the reference's level-0 apply picks its arm per table:
-                      // is_incremental = apply_level0_inc || level5_is_full
-                      // (lib/LINZ/BdeUpload.pm:980) — diff-merge vs replace
-                      val asDiff = level0AsDiff || t.level5IsFull
-                      val s =
-                        if (asDiff)
-                          Loader.level0Incremental(spark, sink, files,
-                            t.key.getOrElse("id"), p.dataset, clean = cleanFn,
-                            columnOverrides = t.columnOverrides,
-                            tolError = t.rowTolError, tolWarning = t.rowTolWarning,
-                            maxFileErrors = cfg.maxFileErrors)
-                        else
-                          // ninsert and the details string are observed metrics
-                          // of the staged write itself — no post-publish recount
-                          Loader.level0Replace(spark, sink, files,
-                            p.dataset, clean = cleanFn,
-                            columnOverrides = t.columnOverrides,
-                            maxFileErrors = cfg.maxFileErrors)
-                      if (s.aborted) throw new IllegalStateException(s.abortReason)
-                      control.recordDatasetLoaded(uplId, cfg.schemaName, t.name,
-                        p.dataset, "0", incremental = asDiff, s.details,
-                        s.ninsert, s.nupdate, s.nnullupdate, s.ndelete)
-                      s
-                    } else if (t.level5IsFull) {
-                      // E3 arm: the level-5 file IS a full snapshot — diff it
-                      val s = Loader.level0Incremental(spark, sink, files,
-                        t.key.getOrElse("id"), p.dataset, clean = cleanFn,
-                        columnOverrides = t.columnOverrides,
-                        tolError = t.rowTolError, tolWarning = t.rowTolWarning,
-                        maxFileErrors = cfg.maxFileErrors)
-                      if (s.aborted) throw new IllegalStateException(s.abortReason)
-                      control.recordDatasetLoaded(uplId, cfg.schemaName, t.name,
-                        p.dataset, "5", incremental = true, s.details,
-                        s.ninsert, s.nupdate, s.nnullupdate, s.ndelete)
-                      s
-                    } else {
+                    if (p.level == "5" && !t.level5IsFull) {
                       // continuity check input: the previous LEVEL-5 load's
                       // per-file END times (lib:944-952 — only when the last
                       // upload was itself a level 5)
@@ -300,10 +272,10 @@ object Orchestrator {
                         .filter(_.lastUploadType.contains("5"))
                         .map(r => Control.parseDetails(r.lastUploadDetails))
                         .getOrElse(Map.empty[String, String])
-                      val s = Loader.level5Apply(spark, sink, files,
+                      Loader.level5Apply(spark, sink, files,
                         changeTable.getOrElse(throw new IllegalStateException(
                           "missing required changetable")),
-                        t.name, t.key.getOrElse("id"), p.dataset,
+                        t.name, key, p.dataset,
                         uniqueCols = t.uniqueCols,
                         tolError = t.rowTolError, tolWarning = t.rowTolWarning,
                         clean = cleanFn, columnOverrides = t.columnOverrides,
@@ -311,12 +283,19 @@ object Orchestrator {
                         prevDetails = prevDetails,
                         continuityWarnHours = cfg.continuityWarnHours,
                         continuityFailHours = cfg.continuityFailHours)
-                      if (s.aborted) throw new IllegalStateException(s.abortReason)
-                      control.recordDatasetLoaded(uplId, cfg.schemaName, t.name,
-                        p.dataset, "5", incremental = true, s.details,
-                        s.ninsert, s.nupdate, s.nnullupdate, s.ndelete)
-                      s
-                    }
+                    } else if (incremental)
+                      Loader.level0Incremental(spark, sink, files, key, p.dataset,
+                        clean = cleanFn, columnOverrides = t.columnOverrides,
+                        tolError = t.rowTolError, tolWarning = t.rowTolWarning,
+                        maxFileErrors = cfg.maxFileErrors)
+                    else
+                      Loader.level0Replace(spark, sink, files, p.dataset,
+                        clean = cleanFn, columnOverrides = t.columnOverrides,
+                        maxFileErrors = cfg.maxFileErrors)
+                  if (stats.aborted) throw new IllegalStateException(stats.abortReason)
+                  control.recordDatasetLoaded(uplId, cfg.schemaName, t.name,
+                    p.dataset, p.level, incremental, stats.details,
+                    stats.ninsert, stats.nupdate, stats.nnullupdate, stats.ndelete)
                   TableOutcome(p.dataset, p.level, t.name, "loaded",
                     stats.ninsert, stats.nupdate, stats.nnullupdate,
                     stats.ndelete, stats.warnings.mkString("; "))

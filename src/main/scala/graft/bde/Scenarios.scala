@@ -305,10 +305,8 @@ object OrchestratorScenario {
         Files.createDirectories(p.getParent)
         Files.writeString(p, content, StandardCharsets.UTF_8)
       }
-      val pab1 = Files.readString(
-        java.nio.file.Paths.get(E2E.FixtureDir, "pab1.crs"), StandardCharsets.UTF_8)
-      write(s"repo/level_0/${E2E.L0Dataset}/pab.crs", pab1)
-      write(s"repo/level_0/${E2E.L5Dataset}/pab.crs", E2E.mutateLevel5(pab1))
+      write(s"repo/level_0/${E2E.L0Dataset}/pab.crs", E2E.pab1())
+      write(s"repo/level_0/${E2E.L5Dataset}/pab.crs", E2E.mutateLevel5(E2E.pab1()))
       val (cat, errs) = Catalog.parse(FullIncTablesConf.linesIterator)
       require(errs.isEmpty, s"catalog errors: $errs")
       val control = new Control(s, root.resolve("control").toString,

@@ -29,9 +29,6 @@ trait TableSink {
   def read(): DataFrame
   /** Stage a complete new version; returns its name (NOT yet published). */
   def stage(df: DataFrame, version: String): String
-  /** Read a staged (not yet published) version — e.g. for the pre-publish
-    * tolerance gate. */
-  def readStaged(stagedName: String): DataFrame
   /** Atomically publish a staged version. */
   def publish(stagedName: String): Unit
   /** Drop an unpublished staged version (abort path). */
@@ -98,9 +95,6 @@ final class ParquetTableSink(
     df.write.mode("overwrite").parquet(new Path(tableDir, name).toString)
     name
   }
-
-  def readStaged(stagedName: String): DataFrame =
-    spark.read.parquet(new Path(tableDir, stagedName).toString)
 
   /** Atomically publish a staged version: temp manifest + OVERWRITE rename.
     * A single `FileContext.rename(..., Rename.OVERWRITE)` replaces the
@@ -248,9 +242,6 @@ final class JdbcTableSink(
     else df.write.mode("overwrite").jdbc(url, name, props)
     name
   }
-
-  def readStaged(stagedName: String): DataFrame =
-    spark.read.jdbc(url, stagedName, props)
 
   /** Ensure the one-row lock table exists. The row is PRIMARY-KEYed so a
     * creation race between two publishers cannot seed two claimable rows

@@ -288,4 +288,20 @@ class LoaderSpec extends SparkSuite with TimeLimits {
       assert(!Files.exists(dir.resolve(s"tables/${L5Slice.Table}/v_${L5Slice.L5Version}")))
     }
   }
+
+  test("level-0 incremental tolerance abort on the observed counts discards the staged version") {
+    failAfter(2.minutes) {
+      val (dir, sink) = loadedSlice()
+      // a snapshot holding one of the three rows: below ceil(3 * 0.95)
+      val s = Loader.level0Incremental(spark, sink,
+        Seq(L5Slice.dataFile(dir, "snap.crs", L5Slice.l0Rows.take(1))),
+        L5Slice.Key, L5Slice.L5Version, tolError = Some(0.95))
+      assert(s.aborted)
+      assert(s.abortReason == "table count 1 below error tolerance of old count 3")
+      assert(stats(s) == ((0L, 0L, 0L, 2L)))
+      assert(sink.currentVersion.contains(s"v_${L5Slice.L0Version}"))
+      assert(sink.read().count() == 3)
+      assert(!Files.exists(dir.resolve(s"tables/${L5Slice.Table}/v_${L5Slice.L5Version}")))
+    }
+  }
 }

@@ -323,6 +323,110 @@ class OrchestratorSpec extends SparkSuite {
       java.sql.Timestamp.valueOf("2020-01-01 00:00:00"))
   }
 
+  /** Writes `files` (repository-relative path -> content) under a fresh
+    * root and returns the run's config and control. */
+  private def stageRepo(files: (String, String)*): (Orchestrator.RunConfig, Control) = {
+    val root = Files.createTempDirectory("graft-orch-arm")
+    files.foreach { case (rel, content) =>
+      val p = root.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, content)
+    }
+    val controlDir = root.resolve("control").toString
+    (Orchestrator.RunConfig(root.resolve("repo").toString,
+      root.resolve("tables").toString, controlDir),
+      new Control(spark, controlDir,
+        () => java.sql.Timestamp.valueOf("2020-06-01 00:00:00")))
+  }
+
+  private val idV = Seq("id" -> "integer", "v" -> "varchar")
+  private val changeCols = Seq("id" -> "integer", "tablename" -> "varchar",
+    "tablekeyvalue" -> "integer", "action" -> "char")
+
+  test("l5_is_full table diffs its snapshot beside a change-driven table; both record level 5 incremental") {
+    val (cfg, control) = stageRepo(
+      "repo/level_0/20200101000000/ful.crs" ->
+        OrchestratorScenario.crs("t_full", idV, Seq("1|a|", "2|b|", "3|c|")),
+      "repo/level_0/20200101000000/chg.crs" ->
+        OrchestratorScenario.crs("t_chg", idV, Seq("1|x|", "2|y|")),
+      // the snapshot drops 1, changes 2 and adds 4; the change file names
+      // only t_chg's keys, so t_full can change only through the diff
+      "repo/level_5/20200202000000/ful.crs" ->
+        OrchestratorScenario.crs("t_full", idV, Seq("2|B|", "3|c|", "4|d|")),
+      "repo/level_5/20200202000000/chg.crs" ->
+        OrchestratorScenario.crs("t_chg", idV, Seq("2|yy|", "3|z|")),
+      "repo/level_5/20200202000000/xchg.crs" ->
+        OrchestratorScenario.crs("xchg", changeCols,
+          Seq("1|t_chg|2|U|", "2|t_chg|3|I|")))
+    val (cat, errs) = Catalog.parse(
+      """TABLE l5_change_table files xchg
+        |TABLE t_full l5_is_full key=id files ful
+        |TABLE t_chg key=id files chg
+        |""".stripMargin.linesIterator)
+    assert(errs.isEmpty)
+    val outcomes = Orchestrator.applyUpdates(spark, cfg,
+      cat, level0 = true, level5 = true, control)
+    val l5 = outcomes.filter(_.level == "5")
+      .map(o => o.table -> (o.status, o.ninsert, o.nupdate, o.nnullupdate, o.ndelete))
+      .toMap
+    assert(l5 == Map(
+      "t_full" -> ("loaded", 1L, 1L, 0L, 1L),
+      "t_chg" -> ("loaded", 1L, 1L, 0L, 0L)))
+    def rows(t: String) = new ParquetTableSink(spark, cfg.tablesDir, t).read()
+      .orderBy("id").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(rows("t_full") == Seq(2 -> "B", 3 -> "c", 4 -> "d"))
+    assert(rows("t_chg") == Seq(1 -> "x", 2 -> "yy", 3 -> "z"))
+    for (t <- Seq("t_full", "t_chg")) {
+      val wm = control.lastUpload("bde", t).get
+      assert(wm.lastUploadDataset.contains("20200202000000"))
+      assert(wm.lastUploadType.contains("5"))
+      assert(wm.incremental)
+    }
+    val l5Stats = control.statRecords.filter(_.dataset == "20200202000000")
+    assert(l5Stats.size == 2)
+    assert(l5Stats.forall(s => s.level == "5" && s.incremental))
+  }
+
+  test("row-tolerance abort fails the table, keeps its version, watermark and stats, then error-skips it") {
+    val (cfg, control) = stageRepo(
+      "repo/level_0/20200101000000/tol.crs" ->
+        OrchestratorScenario.crs("t_tol", idV, Seq("1|a|", "2|b|", "3|c|", "4|d|")),
+      // ds1 deletes half the table: 2 rows < ceil(4 * 0.95)
+      "repo/level_5/20200202000000/tol.crs" ->
+        OrchestratorScenario.crs("t_tol", idV, Seq()),
+      "repo/level_5/20200202000000/xchg.crs" ->
+        OrchestratorScenario.crs("xchg", changeCols,
+          Seq("1|t_tol|1|D|", "2|t_tol|2|D|")),
+      // ds2 is a healthy update
+      "repo/level_5/20200303000000/tol.crs" ->
+        OrchestratorScenario.crs("t_tol", idV, Seq("3|cc|")),
+      "repo/level_5/20200303000000/xchg.crs" ->
+        OrchestratorScenario.crs("xchg", changeCols, Seq("1|t_tol|3|U|")))
+    val (cat, errs) = Catalog.parse(
+      """TABLE l5_change_table files xchg
+        |TABLE t_tol key=id row_tol=0.95,0.95 files tol
+        |""".stripMargin.linesIterator)
+    assert(errs.isEmpty)
+    val outcomes = Orchestrator.applyUpdates(spark, cfg,
+      cat, level0 = true, level5 = true, control)
+    val byDs = outcomes.map(o => o.dataset -> o).toMap
+    assert(byDs("20200101000000").status == "loaded")
+    assert(byDs("20200202000000").status == "failed")
+    assert(byDs("20200202000000").message ==
+      "table count 2 below error tolerance of old count 4")
+    assert(byDs("20200303000000").status == "skipped")
+    assert(byDs("20200303000000").message == "skipped after earlier failure")
+    val sink = new ParquetTableSink(spark, cfg.tablesDir, "t_tol")
+    assert(sink.currentVersion.contains("v_20200101000000"))
+    assert(sink.read().count() == 4)
+    val wm = control.lastUpload("bde", "t_tol").get
+    assert(wm.lastUploadDataset.contains("20200101000000"))
+    assert(wm.lastUploadType.contains("0"))
+    assert(control.statRecords.map(s => (s.dataset, s.level)) ==
+      Seq("20200101000000" -> "0"))
+    assert(control.upload(1).get.status == Control.StatusError)
+  }
+
   test("file-error budget: within budget drops bad rows, breach aborts") {
     val (loaded, aborted) = OrchestratorScenario.runErrorBudget(spark)
     assert(loaded == 3)
