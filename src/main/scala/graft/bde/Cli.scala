@@ -291,6 +291,10 @@ object Cli {
           .config("spark.sql.shuffle.partitions",
             sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
           .config("spark.sql.session.timeZone", "UTC")
+          // local file creates without a forked `chmod` each (part files,
+          // `.crc` sidecars, committer directories) — see
+          // graft.fs.NoChmodLocalFileSystem; other schemes are unaffected
+          .config("spark.hadoop.fs.file.impl", "graft.fs.NoChmodLocalFileSystem")
           .getOrCreate()
         val log = new RunLog(o.verbose, o.listingFile,
           o.logLevel.getOrElse("INFO"))

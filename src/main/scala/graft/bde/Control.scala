@@ -422,12 +422,13 @@ final class Control(
   def uploadTableRecords: Seq[UploadTableRow] = synchronized(uploadTables)
 
   /** Persist ONLY the mutated control tables. Written DIRECTLY by the
-    * driver via parquet-hadoop (`ExampleParquetWriter`) and swapped in with
-    * one atomic OVERWRITE rename — a control mutation is a ~ms file write,
-    * never a scheduled Spark job (the old `toDF.coalesce(1).write` path
-    * cost a full job per mutation: thousands of cluster round-trips across
-    * a 94-table run, and a crash mid-`mode("overwrite")` could leave no
-    * control state at all). The persisted upload file carries the
+    * driver via parquet-hadoop (`ExampleParquetWriter`) and swapped in by
+    * [[ControlStore.replaceFile]] (one `rename(2)` on the local file system,
+    * a `FileContext` OVERWRITE rename elsewhere) — a control mutation is a
+    * few-millisecond file write, never a scheduled Spark job (the old
+    * `toDF.coalesce(1).write` path cost a full job per mutation: thousands
+    * of cluster round-trips across a 94-table run, and a crash
+    * mid-`mode("overwrite")` could leave no control state at all). The persisted upload file carries the
     * start/end timestamps the 3-column [[uploadsDf]] view omits, so a
     * restarted process recovers heartbeats for zombie expiry. */
   private def save(
@@ -569,20 +570,23 @@ object Control {
 
 /**
  * Direct driver-side parquet I/O for the three control tables: a control
- * mutation is a metadata write of a few KB, so it uses parquet-hadoop's
- * example writer in-process (≈1 ms) with an atomic OVERWRITE rename,
- * instead of scheduling a Spark job. Schemas use INT64 TIMESTAMP(MICROS)
- * and the same sentinel encodings (-1 / "") as the DataFrame views.
+ * mutation is a metadata write of a few KB, so it renders the rows with
+ * parquet-hadoop's example writer in memory and swaps the file in with
+ * [[replaceFile]], instead of scheduling a Spark job. Schemas use INT64
+ * TIMESTAMP(MICROS) and the same sentinel encodings (-1 / "") as the
+ * DataFrame views.
  */
 private[bde] object ControlStore {
 
+  import java.nio.file.{Files, StandardCopyOption}
+
   import org.apache.hadoop.conf.Configuration
-  import org.apache.hadoop.fs.{FileContext, Options, Path}
+  import org.apache.hadoop.fs.{CreateFlag, FileContext, LocalFileSystem, Options, Path}
   import org.apache.parquet.example.data.Group
   import org.apache.parquet.example.data.simple.SimpleGroup
   import org.apache.parquet.hadoop.ParquetReader
   import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-  import org.apache.parquet.hadoop.util.HadoopOutputFile
+  import org.apache.parquet.io.{OutputFile, PositionOutputStream}
   import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 
   import Control._
@@ -693,8 +697,8 @@ private[bde] object ControlStore {
     g
   }
 
-  /** Write rows to a HIDDEN `.<name>.tmp` sibling, then one atomic
-    * OVERWRITE rename — a reader (or a crash) never observes a partial
+  /** Write rows to `path`, swapped in by [[replaceFile]] through a HIDDEN
+    * `.<name>.tmp` sibling — a reader (or a crash) never observes a partial
     * control table. The dot prefix matters beyond crash safety: Spark's
     * file listing hides only `.`/`_`-prefixed entries, so an un-hidden
     * `<name>.tmp` staged in the SAME directory could be listed mid-write by
@@ -705,20 +709,68 @@ private[bde] object ControlStore {
       path: String,
       schema: MessageType,
       rows: Seq[T])(mk: (MessageType, T) => Group): Unit = {
-    val target = new Path(path)
-    val fs = target.getFileSystem(conf)
-    val qTarget = fs.makeQualified(target)
-    val tmp = new Path(qTarget.getParent, "." + qTarget.getName + ".tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, false)
-    fs.mkdirs(qTarget.getParent)
-    val writer = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(tmp, conf))
-      .withType(schema)
-      .build()
+    val file = new BytesOutputFile
+    val writer = ExampleParquetWriter.builder(file).withConf(WriterConf)
+      .withType(schema).build()
     try rows.foreach(r => writer.write(mk(schema, r)))
     finally writer.close()
-    val fc = FileContext.getFileContext(qTarget.toUri, conf)
-    fc.rename(tmp, qTarget, Options.Rename.OVERWRITE)
+    val target = new Path(path)
+    replaceFile(conf, target, "." + target.getName + ".tmp", file.bytes.toByteArray)
+  }
+
+  /** Replace `target` with `bytes`: write the sibling `tmpName`, then rename
+    * it onto `target`. Readers see the old file or the new one, never a
+    * partial or a missing file.
+    *
+    * On the local file system (any `LocalFileSystem`, subclasses included)
+    * this is `java.nio`: the rename is one `rename(2)`, and no process is
+    * spawned (Hadoop's local create and `FileContext` rename fork `chmod`
+    * and `readlink` when the native library is absent). The target's stale
+    * `.crc` sidecar is deleted BEFORE the rename: a reader between the two
+    * steps reads the old file unverified, where the reverse order would let
+    * it check the new file against the old checksum. Other schemes create
+    * the temp file and rename with `FileContext` OVERWRITE, which is atomic
+    * on HDFS (`rename2`); object stores give no atomic rename. */
+  def replaceFile(conf: Configuration, target: Path, tmpName: String,
+      bytes: Array[Byte]): Unit = {
+    val fs = target.getFileSystem(conf)
+    val qTarget = fs.makeQualified(target)
+    fs match {
+      case local: LocalFileSystem =>
+        val file = local.pathToFile(qTarget).toPath
+        val tmp = file.resolveSibling(tmpName)
+        Files.createDirectories(file.getParent)
+        Files.write(tmp, bytes)
+        Files.deleteIfExists(local.pathToFile(local.getChecksumFile(qTarget)).toPath)
+        Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE)
+      case _ =>
+        val fc = FileContext.getFileContext(qTarget.toUri, conf)
+        val tmp = new Path(qTarget.getParent, tmpName)
+        val out = fc.create(tmp,
+          java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+          Options.CreateOpts.createParent())
+        try out.write(bytes) finally out.close()
+        fc.rename(tmp, qTarget, Options.Rename.OVERWRITE)
+    }
+  }
+
+  /** The writer's settings: a default `Configuration`, as the builder
+    * creates when given none, built once — a fresh one re-parses Hadoop's
+    * default resources on every write. */
+  private lazy val WriterConf = new Configuration()
+
+  /** A parquet output file held in memory (control files are a few KB). */
+  private final class BytesOutputFile extends OutputFile {
+    val bytes = new java.io.ByteArrayOutputStream
+    def create(blockSizeHint: Long): PositionOutputStream = new PositionOutputStream {
+      def getPos: Long = bytes.size.toLong
+      def write(b: Int): Unit = bytes.write(b)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit =
+        bytes.write(b, off, len)
+    }
+    def createOrOverwrite(blockSizeHint: Long): PositionOutputStream = create(blockSizeHint)
+    def supportsBlockSize: Boolean = false
+    def defaultBlockSize: Long = 0L
   }
 
   /** Read all groups of one control file; None when it does not exist. */

@@ -156,7 +156,7 @@ object E2E {
       tolError = Some(0.20), tolWarning = Some(0.95),
       prevDetails = prev, continuityWarnHours = 0.5, continuityFailHours = 0)
     require(stats.warnings.isEmpty,
-      s"unexpected continuity warnings: ${stats.warnings.mkString("; ")}")
+      s"unexpected warnings: ${stats.warnings.mkString("; ")}")
     control.recordDatasetLoaded(upl2, "bde", TableName, L5Dataset, "5",
       incremental = true, details = stats.details,
       ninsert = stats.ninsert, nupdate = stats.nupdate,

@@ -42,7 +42,8 @@ object Loader {
         * files' header END times — persisted with the watermark so the next
         * increment's continuity check has its previous end times. */
       details: String = "",
-      /** Non-fatal issues (continuity warnings) surfaced to the caller. */
+      /** Non-fatal issues (continuity and warning-tolerance breaches)
+        * surfaced to the caller. */
       warnings: Seq[String] = Nil)
 
   /** The details-map key for a file path: basename minus extension,
@@ -190,7 +191,9 @@ object Loader {
    * gate (the level-0 replace's file-error budget, whose observations the
    * write fires). A check that throws, or a row count below the error
    * tolerance of the old count, discards the staged version: the published
-   * one is untouched. `stats` gets the new row count.
+   * one is untouched. A row count below only the warning tolerance still
+   * publishes and adds a warning to the stats, as the reference raises a
+   * WARNING there. `stats` gets the new row count.
    */
   private def commit(
       sink: TableSink,
@@ -209,10 +212,12 @@ object Loader {
         checkStaged()
         val oldCount = oldCounted.fold(0L)(o => observedRows(o._2))
         val newCount = observedRows(newObs)
-        val (err, _) = toleranceCheck(oldCount, newCount, tolError, tolWarning)
+        val (err, warn) = toleranceCheck(oldCount, newCount, tolError, tolWarning)
         val s = stats(newCount)
         if (err) s.copy(aborted = true, abortReason =
           s"table count $newCount below error tolerance of old count $oldCount")
+        else if (warn) s.copy(warnings = s.warnings :+
+          s"table count $newCount below warning tolerance of old count $oldCount")
         else s
       } catch { case e: Throwable => sink.discard(staged); throw e }
     if (gated.aborted) sink.discard(staged) else sink.publish(staged)

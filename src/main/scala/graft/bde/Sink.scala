@@ -1,6 +1,6 @@
 package graft.bde
 
-import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -39,7 +39,8 @@ trait TableSink {
 
 /**
  * Parquet-backed sink: each version is its own directory; publish
- * re-points a tiny `_CURRENT` manifest with one atomic rename.
+ * re-points a tiny `_CURRENT` manifest with one rename (atomic on the
+ * local file system and on HDFS).
  *
  * At 100 TB the staged write is a normal distributed parquet write (all
  * executors), and publish cost is one metadata rename — no data is ever
@@ -96,22 +97,16 @@ final class ParquetTableSink(
     name
   }
 
-  /** Atomically publish a staged version: temp manifest + OVERWRITE rename.
-    * A single `FileContext.rename(..., Rename.OVERWRITE)` replaces the
-    * pointer in one atomic metadata op — there is never an instant with no
-    * published version (a delete-then-rename window would make a concurrent
-    * reader see the table vanish and a crash strand it pointerless). */
-  def publish(stagedName: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val qTableDir = fs.makeQualified(tableDir)
-    val fc = FileContext.getFileContext(qTableDir.toUri, conf)
-    val tmp = new Path(qTableDir, s"_CURRENT.tmp.$stagedName")
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
-      Options.CreateOpts.createParent())
-    try out.write(stagedName.getBytes("UTF-8")) finally out.close()
-    fc.rename(tmp, new Path(qTableDir, "_CURRENT"), Options.Rename.OVERWRITE)
-  }
+  /** Publish a staged version: write `stagedName` to a `_CURRENT.tmp.*`
+    * sibling and rename it onto `_CURRENT` ([[ControlStore.replaceFile]]).
+    * On the local file system that rename is one atomic `rename(2)`; on
+    * HDFS it is an atomic `FileContext` OVERWRITE rename. Either way there
+    * is never an instant with no published version (a delete-then-rename
+    * window would make a concurrent reader see the table vanish and a
+    * crash strand it pointerless). */
+  def publish(stagedName: String): Unit =
+    ControlStore.replaceFile(spark.sparkContext.hadoopConfiguration, currentPtr,
+      s"_CURRENT.tmp.$stagedName", stagedName.getBytes("UTF-8"))
 
   def discard(stagedName: String): Unit = {
     if (!keepFiles) fs.delete(new Path(tableDir, stagedName), true)

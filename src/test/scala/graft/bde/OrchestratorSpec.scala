@@ -427,6 +427,43 @@ class OrchestratorSpec extends SparkSuite {
     assert(control.upload(1).get.status == Control.StatusError)
   }
 
+  test("row-tolerance warning publishes the load and reports the breach; an in-tolerance load reports none") {
+    val (cfg, control) = stageRepo(
+      "repo/level_0/20200101000000/tol.crs" ->
+        OrchestratorScenario.crs("t_tol", idV, Seq("1|a|", "2|b|", "3|c|", "4|d|")),
+      // ds1 deletes half the table: 2 rows < ceil(4 * 0.95), >= ceil(4 * 0.20)
+      "repo/level_5/20200202000000/tol.crs" ->
+        OrchestratorScenario.crs("t_tol", idV, Seq()),
+      "repo/level_5/20200202000000/xchg.crs" ->
+        OrchestratorScenario.crs("xchg", changeCols,
+          Seq("1|t_tol|1|D|", "2|t_tol|2|D|")),
+      // ds2 updates a row: 2 rows = ceil(2 * 0.95); it starts where ds1
+      // ended, so the continuity check adds no warning either
+      "repo/level_5/20200303000000/tol.crs" ->
+        OrchestratorScenario.crs("t_tol", idV, Seq("3|cc|"),
+          start = "2020-01-01 01:00:00", end = "2020-01-01 02:00:00"),
+      "repo/level_5/20200303000000/xchg.crs" ->
+        OrchestratorScenario.crs("xchg", changeCols, Seq("1|t_tol|3|U|")))
+    val (cat, errs) = Catalog.parse(
+      """TABLE l5_change_table files xchg
+        |TABLE t_tol key=id row_tol=0.20,0.95 files tol
+        |""".stripMargin.linesIterator)
+    assert(errs.isEmpty)
+    val outcomes = Orchestrator.applyUpdates(spark, cfg,
+      cat, level0 = true, level5 = true, control)
+    val byDs = outcomes.map(o => o.dataset -> o).toMap
+    assert(outcomes.map(_.status) == Seq("loaded", "loaded", "loaded"))
+    assert(byDs("20200202000000").message ==
+      "table count 2 below warning tolerance of old count 4")
+    assert(byDs("20200202000000").ndelete == 2)
+    assert(byDs("20200303000000").message == "")
+    val sink = new ParquetTableSink(spark, cfg.tablesDir, "t_tol")
+    assert(sink.currentVersion.contains("v_20200303000000"))
+    assert(sink.read().orderBy("id").collect().map(r => (r.getInt(0), r.getString(1))).toSeq ==
+      Seq(3 -> "cc", 4 -> "d"))
+    assert(control.lastUpload("bde", "t_tol").get.lastUploadDataset.contains("20200303000000"))
+  }
+
   test("file-error budget: within budget drops bad rows, breach aborts") {
     val (loaded, aborted) = OrchestratorScenario.runErrorBudget(spark)
     assert(loaded == 3)
