@@ -46,6 +46,14 @@ import org.apache.spark.sql.functions._
  * passed back in as a driver-local relation it broadcasts straight from
  * the driver. The current table, the increment rows and the full-snapshot
  * diff of [[fullDiff]] (as large as the table) stay distributed.
+ *
+ * What an apply writes: an action set comes down to one step of
+ * [[merge]], the increment rows it adds and the keys whose current rows
+ * it removes ([[changes]]), both sized by the change set. The level-0 diff
+ * and a sink without deltas stage the merged table in full. A level-5 load
+ * on a [[ParquetTableSink]] stores just the step as a delta, and the
+ * sink's read folds the base and every delta through the same [[merge]],
+ * so a version reads the same either way.
  */
 object Diff {
 
@@ -173,39 +181,61 @@ object Diff {
   }
 
   /**
+   * What a classified action set changes (`_ver_apply_changes`,
+   * sql:1762-1765): the incoming rows of the inserted, updated and
+   * key-shifted keys, and the deleted, updated and key-shifted keys, whose
+   * current rows go. ('0' null-updates change nothing; 'X' behaves as
+   * delete+insert, which for a keyed merge is the same as replace.) Both are
+   * sized by the change set; the added rows are `inc` reduced by a
+   * broadcast semi join on the RIGHT, so the increment streams.
+   */
+  def changes(inc: DataFrame, actions: DataFrame, key: String): (DataFrame, DataFrame) = {
+    // The action set feeds TWO key derivations here, so an `actions`
+    // lineage that runs the classify pipeline (itself two scans of the big
+    // tables) must be materialized first: the level-5 loader passes its
+    // collected pairs as a driver-local relation, the level-0 diff a cached
+    // frame (caching here instead would leak: this function returns lazy
+    // frames and never sees the consuming action).
+    val acts = actions.select(col(key), col("action"))
+    def keysOf(as: String*) = acts.where(col("action").isin(as: _*)).select(col(key))
+    val added = inc.join(
+      broadcast(keysOf(ActionInsert, ActionUpdate, ActionUniqueShift)), Seq(key), "left_semi")
+    (added, keysOf(ActionDelete, ActionUpdate, ActionUniqueShift))
+  }
+
+  /**
+   * Apply change sets to `base` in order, each an (added rows, removed keys)
+   * pair as [[changes]] returns it: a step removes every row, of the base or
+   * of an earlier step, whose key it names, then adds its rows. This is the
+   * one merge of the engine: [[applyActions]] is one step of it, and a
+   * [[ParquetTableSink]] delta version is read as its base plus every
+   * delta's step.
+   *
+   * Each step's removed keys are sized by its change set, so they are the
+   * broadcast build side of an anti join (on the RIGHT; the rows stream).
+   * Spark pushes the anti joins down to every layer and reuses each step's
+   * broadcast, so a chain of n steps costs n small broadcasts per query.
+   */
+  def merge(base: DataFrame, steps: Seq[(DataFrame, DataFrame)], key: String): DataFrame = {
+    // using-column joins move the key to the front; restore the base's order
+    val order = base.columns.map(col).toIndexedSeq
+    steps.foldLeft(base) { case (rows, (added, removedKeys)) =>
+      rows.join(broadcast(removedKeys), Seq(key), "left_anti").select(order: _*)
+        .unionByName(added.select(order: _*))
+    }
+  }
+
+  /**
    * Apply a classified action set: keep current rows not deleted/updated,
-   * then add the incoming version of inserted/updated/key-shifted rows.
-   * ('0' null-updates leave the current row untouched; 'X' behaves as
-   * delete+insert, which for a keyed merge is the same as replace.)
-   * Both key sets are change-set sized → broadcast build sides (correctly
-   * on the RIGHT of the semi/anti joins; the big tables stream).
+   * then add the incoming version of inserted/updated/key-shifted rows —
+   * one step of [[merge]] built by [[changes]].
    */
   def applyActions(
       cur: DataFrame,
       inc: DataFrame,
       actions: DataFrame,
-      key: String): DataFrame = {
-    // The action set feeds TWO broadcast key derivations below, so an
-    // `actions` lineage that runs the classify pipeline (itself two scans
-    // of the big tables) must be materialized first: the level-5 loader
-    // passes its collected pairs as a driver-local relation, the level-0
-    // diff a cached frame (caching here instead would leak: this function
-    // returns a lazy frame and never sees the consuming action).
-    val acts = actions.select(col(key), col("action"))
-    val removeKeys = acts
-      .where(col("action").isin(ActionDelete, ActionUpdate, ActionUniqueShift))
-      .select(col(key))
-    val addKeys = acts
-      .where(col("action").isin(ActionInsert, ActionUpdate, ActionUniqueShift))
-      .select(col(key))
-    // using-column joins move the key to the front; restore cur's order
-    val order = cur.columns.map(col).toIndexedSeq
-    val kept  = cur.join(broadcast(removeKeys), Seq(key), "left_anti")
-      .select(order: _*)
-    val added = inc.join(broadcast(addKeys), Seq(key), "left_semi")
-      .select(order: _*)
-    kept.unionByName(added)
-  }
+      key: String): DataFrame =
+    merge(cur, Seq(changes(inc, actions, key)), key)
 
   /**
    * A1 — per-action counts (`_ver_apply_changes` returns nins/ndel/nupd;

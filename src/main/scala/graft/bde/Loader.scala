@@ -9,18 +9,20 @@ import org.apache.spark.sql.types.StructType
 /**
  * E1/E2/E3 — the load paths, wiring reader → cleanser → projection → diff →
  * sink → stats (SURVEY §3). Every load is one path: the shared read step
- * ([[TableFiles]]), what the load computes, and the shared commit step
- * ([[commit]]: stage → gate → publish or discard). The loads differ only
- * in the middle:
+ * ([[TableFiles]]), what the load computes and stages, and the shared
+ * commit step ([[gate]]: gate the staged version, then publish or discard
+ * it). The loads differ only in the middle:
  *
  *  - [[level0Replace]]  = E1, `bde_ApplyLevel0Update` non-incremental arm
  *    (sql:1949-1973): the union itself is the new version (truncate and
- *    replace); its gate is the file-error budget, with no tolerance.
+ *    replace), staged in full; its gate is the file-error budget, with no
+ *    tolerance.
  *  - [[level5Apply]]    = E2, `bde_ApplyLevel5Update` (sql:1576-1818):
- *    change-table-driven classify, then apply.
+ *    change-table-driven classify, then only the change set is staged (a
+ *    delta on a [[ParquetTableSink]]).
  *  - [[level0Incremental]] = E3 (sql:1887-1948): full-outer diff of the new
- *    snapshot vs current, then the same apply (also the `l5_is_full` arm —
- *    a level-5 dataset whose files are full snapshots).
+ *    snapshot vs current, then the same apply, staged in full (also the
+ *    `l5_is_full` arm — a level-5 dataset whose files are full snapshots).
  *
  * The row-count tolerance check is an ABORT GATE exactly as in the
  * reference (`_bde_CheckTableCount`, sql:2006-2085, called before the
@@ -189,11 +191,7 @@ object Loader {
    * as is the new row count, so the gate re-counts nothing and never re-reads
    * the staged version. `checkStaged` runs after the write and before the
    * gate (the level-0 replace's file-error budget, whose observations the
-   * write fires). A check that throws, or a row count below the error
-   * tolerance of the old count, discards the staged version: the published
-   * one is untouched. A row count below only the warning tolerance still
-   * publishes and adds a warning to the stats, as the reference raises a
-   * WARNING there. `stats` gets the new row count.
+   * write fires).
    */
   private def commit(
       sink: TableSink,
@@ -206,12 +204,30 @@ object Loader {
       stats: Long => LoadStats): LoadStats = {
     val oldCounted = old.map(counted)
     val (rows, newObs) = counted(next(oldCounted.map(_._1)))
-    val staged = sink.stage(rows, version)
+    gate(sink, sink.stage(rows, version), tolError, tolWarning, checkStaged)(
+      () => (oldCounted.fold(0L)(o => observedRows(o._2)), observedRows(newObs)))(stats)
+  }
+
+  /**
+   * Gate a staged version, then publish or discard it. `counts` gives the
+   * old and new row counts. A check that throws, or a new count below the
+   * error tolerance of the old count, discards the staged version: the
+   * published one is untouched. A count below only the warning tolerance
+   * still publishes and adds a warning to the stats, as the reference
+   * raises a WARNING there. `stats` gets the new row count.
+   */
+  private def gate(
+      sink: TableSink,
+      staged: String,
+      tolError: Option[Double],
+      tolWarning: Option[Double],
+      checkStaged: () => Unit = () => ())(
+      counts: () => (Long, Long))(
+      stats: Long => LoadStats): LoadStats = {
     val gated =
       try {
         checkStaged()
-        val oldCount = oldCounted.fold(0L)(o => observedRows(o._2))
-        val newCount = observedRows(newObs)
+        val (oldCount, newCount) = counts()
         val (err, warn) = toleranceCheck(oldCount, newCount, tolError, tolWarning)
         val s = stats(newCount)
         if (err) s.copy(aborted = true, abortReason =
@@ -251,9 +267,9 @@ object Loader {
    * tablekeyvalue, action, timestamp — `bde_CreateL5ChangeTable`,
    * sql:1420-1461) is filtered to this table (P4, sql:1695-1708), the
    * working copy (union of the table's increment files) classified against
-   * the current version (J1-J3+J5), merged, and committed through the
-   * tolerance gate; stats mirror `_ver_apply_changes` + the null-update
-   * count (sql:1757-1765).
+   * the current version (J1-J3+J5), and what it changes staged and committed
+   * through the tolerance gate; stats mirror `_ver_apply_changes` + the
+   * null-update count (sql:1757-1765).
    *
    * The reference pre-filters and indexes the change keys once per table
    * and counts rows with `GET DIAGNOSTICS ROW_COUNT` (sql:1689-1717,
@@ -263,10 +279,20 @@ object Loader {
    * reference keeps them in `_tmp_inc_change`/`_tmp_inc_actions`. Each is
    * bounded by the day's delta, never by the table. Passed on as local
    * relations they broadcast from the driver without recomputing anything,
-   * and the I/U/0/X/D stats are counted there. `cur`, the increment rows
-   * and the merge stay distributed. Given a driver-local `changeTable` (as
+   * and the I/U/0/X/D stats are counted there. `cur` and the increment rows
+   * stay distributed. Given a driver-local `changeTable` (as
    * [[Orchestrator]] passes it), taking this table's keys runs no Spark job
    * either.
+   *
+   * Like the reference's `_ver_apply_changes`, the load touches only the
+   * changed rows: it stages the change set — the increment rows of the
+   * I/U/X keys and the D/U/X keys — with the sink's change-set
+   * [[TableSink.stage]], which a [[ParquetTableSink]] stores as a delta on
+   * the published chain (its write scans only the increment) and other
+   * sinks as a full rewrite. The gate's old count is an observed metric of
+   * the classify scan of `cur`, which also observes the current keys in the
+   * change set; the new count is old − the current rows of the removed keys
+   * + the added rows, observed on the staged write.
    */
   def level5Apply(
       spark: SparkSession,
@@ -293,10 +319,10 @@ object Loader {
       continuityWarnHours, continuityFailHours)
     // The increment is change-set-sized (a daily delta, never the big
     // table) and is consumed by the key-swap repair, the classifier and the
-    // merge — cache it so the files are scanned once for the whole load.
-    // One try/finally releases it on EVERY exit — returns, aborts, and
-    // exceptions from any stage (a failing table otherwise pins its cache
-    // for the rest of a 94-table run).
+    // staged write — cache it so the files are scanned once for the whole
+    // load. One try/finally releases it on EVERY exit — returns, aborts,
+    // and exceptions from any stage (a failing table otherwise pins its
+    // cache for the rest of a 94-table run).
     val inc = read.rows(Some(cur.columns.toSeq)).cache()
     try {
       if (maxFileErrors.isDefined) {
@@ -327,15 +353,38 @@ object Loader {
           val fixed = Diff.fixChangedKeys(cur, inc, chg, key, uniqueCols)
           local(spark, fixed.collect().toSeq, fixed.schema)
         }
-      val classified = Diff.classifyChanges(cur, inc, repaired, key, uniqueCols,
+      // the classify scan counts `cur` and lists its keys in the change set
+      // (with their duplicates): the gate's old and removed row counts
+      val (curCounted, oldObs) = counted(cur)
+      val hitObs = Observation(s"graft_hits_${obsId.incrementAndGet()}")
+      val hits = curCounted.join(broadcast(repaired), Seq(key), "left_semi")
+        .observe(hitObs, collect_list(col(key)).as("keys"))
+      val classified = Diff.classifyChanges(hits, inc, repaired, key, uniqueCols,
         repairKeySwaps = false)
       val actionRows = classified.collect().toSeq
-      val actions = local(spark, actionRows, classified.schema)
       val counts = actionRows.groupMapReduce(_.getString(1))(_ => 1L)(_ + _)
       def n(a: String) = counts.getOrElse(a, 0L)
-      commit(sink, version, Some(cur), tolError, tolWarning)(
-        old => Diff.applyActions(old.getOrElse(cur), inc, actions, key))(
-        _ => LoadStats(tableName, n("I"), n("U") + n("X"), n("0"), n("D"),
+      val (added, removed) =
+        Diff.changes(inc, local(spark, actionRows, classified.schema), key)
+      val (addedRows, addedObs) = counted(added)
+      val staged = sink.stage(addedRows, removed, key, version)
+      gate(sink, staged, tolError, tolWarning)(() => {
+        // Adaptive execution drops the classify scan of `cur`, metrics and
+        // all, from the final plan when no current row has a change key;
+        // then no current row goes, and only the old count needs a job.
+        val oldCount = oldObs.get.get("rows").fold(cur.count())(_.asInstanceOf[Long])
+        // keys compare as strings: the action keys take the wider of the
+        // current and increment key types
+        val curRows = hitObs.get.get("keys").fold(Seq.empty[Any])(
+          _.asInstanceOf[scala.collection.Seq[Any]].toSeq)
+          .groupMapReduce(String.valueOf)(_ => 1L)(_ + _)
+        val removedRows = removed.collect().map(r => String.valueOf(r.get(0))).distinct
+          .map(curRows.getOrElse(_, 0L)).sum
+        // with no I/U/X key the staged write may evaluate nothing
+        val addedCount =
+          if (n("I") + n("U") + n("X") == 0) 0L else observedRows(addedObs)
+        (oldCount, oldCount - removedRows + addedCount)
+      })(_ => LoadStats(tableName, n("I"), n("U") + n("X"), n("0"), n("D"),
           aborted = false, "", read.details, warnings))
     } finally inc.unpersist()
   }

@@ -1,17 +1,28 @@
 package graft.bde
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
 
 /**
  * S5/S6 — table sinks with "dataset transaction" atomicity (SURVEY §7.4b).
  *
- * Every write stages a complete new table version first and publishes it
+ * Every write stages a new table version first and publishes it
  * atomically; readers always see a complete version, and a failed or
  * aborted load leaves the previous version untouched — the Spark
  * equivalent of the reference's per-dataset transaction + rollback
  * (`beginDataset`/`endDataset`, lib/LINZ/BdeDatabase.pm:455-510) and of the
  * truncate-and-replace swap (`bde_ApplyLevel0Update`, sql:1949-1973).
+ *
+ * A version is staged from one of two inputs. The whole new table: the
+ * level-0 replace, the level-0 diff and `l5_is_full` loads. Or one level-5
+ * change set (the rows it adds and the keys whose rows it removes, both
+ * sized by the change set): the level-5 load. A sink stages the change
+ * set's merge as a complete version unless it stores deltas
+ * ([[ParquetTableSink]] does).
  *
  * Two implementations:
  *  - [[ParquetTableSink]] — versioned parquet dirs + an atomically-renamed
@@ -29,6 +40,13 @@ trait TableSink {
   def read(): DataFrame
   /** Stage a complete new version; returns its name (NOT yet published). */
   def stage(df: DataFrame, version: String): String
+  /** Stage the version that applies one change set to the published one
+    * (`_ver_apply_changes`, sql:1762-1765): every row whose `key` is in
+    * `removedKeys` (one `key` column, driver-local) goes, and the rows of
+    * `added` come in. This default stages the merged table as a complete
+    * version. Returns its name (NOT yet published). */
+  def stage(added: DataFrame, removedKeys: DataFrame, key: String, version: String): String =
+    stage(Diff.merge(read(), Seq(added -> removedKeys), key), version)
   /** Atomically publish a staged version. */
   def publish(stagedName: String): Unit
   /** Drop an unpublished staged version (abort path). */
@@ -41,6 +59,27 @@ trait TableSink {
  * Parquet-backed sink: each version is its own directory; publish
  * re-points a tiny `_CURRENT` manifest with one rename (atomic on the
  * local file system and on HDFS).
+ *
+ * A version directory is one of two kinds:
+ *  - a full version: the table's parquet files and nothing else. Every
+ *    complete write stages one, and every directory written before deltas
+ *    existed is one.
+ *  - a delta version: the parquet files of the rows one level-5 load added,
+ *    `_REMOVED` (the keys whose rows it removed, one per line) and `_CHAIN`
+ *    (the manifest: the table key, the base full version, then every delta
+ *    from the oldest to this one, each with the schema its files carry, so
+ *    reading a chain infers no schema). Earlier deltas stay directories of
+ *    their own, named by every later manifest, never copied.
+ *
+ * [[read]] resolves `_CURRENT` once and folds a delta version's chain with
+ * [[Diff.merge]], the merge a complete rewrite stages: a row of the base or
+ * of a delta survives unless a later delta removed its key. A level-5 load
+ * therefore writes what it changed, and its staged write scans only the
+ * increment. A fixed rule bounds the chain: a load whose chain already
+ * holds [[ParquetTableSink.MaxDeltas]] deltas, or whose deltas hold more
+ * than a quarter of the base's bytes, stages a complete version instead
+ * (compaction). So does a table whose key is not an integer (the
+ * reference's `bde_TableKeyIsValid` allows int and bigint only).
  *
  * At 100 TB the staged write is a normal distributed parquet write (all
  * executors), and publish cost is one metadata rename — no data is ever
@@ -57,45 +96,118 @@ final class ParquetTableSink(
       * dirs stay prunable later via [[pruneVersions]] / `-m`. */
     keepFiles: Boolean = false) extends TableSink {
 
+  import ParquetTableSink._
+
   private val tableDir = new Path(s"$rootDir/$table")
   private val currentPtr = new Path(tableDir, "_CURRENT")
-  private def fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def conf = spark.sparkContext.hadoopConfiguration
+  private def fs = tableDir.getFileSystem(conf)
+  private def dir(version: String) = new Path(tableDir, version)
 
-  def currentVersion: Option[String] = {
+  private def readText(p: Path): Option[String] = {
     val f = fs
-    if (!f.exists(currentPtr)) None
+    if (!f.exists(p)) None
     else {
-      val in = f.open(currentPtr)
-      try {
-        val s = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        if (s.isEmpty) None else Some(s)
-      } finally in.close()
+      val in = f.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
     }
+  }
+
+  def currentVersion: Option[String] = readText(currentPtr).map(_.trim).filter(_.nonEmpty)
+
+  /** The `_CHAIN` manifest of a delta version; None for a full version. */
+  private def chainOf(version: String): Option[Chain] =
+    readText(new Path(dir(version), ChainFile)).map(Chain.parse)
+
+  /** The version directories `version` is read from. */
+  private def versionsRead(version: String): Seq[String] =
+    chainOf(version).fold(Seq(version))(_.layers.map(_.version))
+
+  /** A full version, its schema read from its files (one Spark job). */
+  private def parquet(version: String): DataFrame =
+    spark.read.parquet(dir(version).toString)
+
+  /** A layer of a chain, read with the schema its manifest records. */
+  private def parquet(layer: Layer): DataFrame =
+    spark.read.schema(layer.schema).parquet(dir(layer.version).toString)
+
+  /** A delta's removed keys as a driver-local relation of the key's type. */
+  private def removedOf(delta: String, key: String, keyType: DataType): DataFrame = {
+    val text = readText(new Path(dir(delta), RemovedFile)).getOrElse(
+      throw new IllegalStateException(s"table $table: delta $delta has no $RemovedFile"))
+    val rows = text.linesIterator.filter(_.nonEmpty).map(k => Row(k.toLong)).toSeq
+    spark.createDataFrame(rows.asJava, StructType(Seq(StructField(key, LongType))))
+      .select(col(key).cast(keyType))
   }
 
   def read(): DataFrame = {
     val v = currentVersion.getOrElse(
       throw new IllegalStateException(s"table $table has no published version"))
-    spark.read.parquet(new Path(tableDir, v).toString)
+    chainOf(v).fold(parquet(v)) { c =>
+      val keyType = c.base.schema(c.key).dataType
+      Diff.merge(parquet(c.base),
+        c.deltas.map(d => parquet(d) -> removedOf(d.version, c.key, keyType)), c.key)
+    }
+  }
+
+  /** The name to stage `version` under: `v_<version>`, or the first free
+    * `_r<n>` suffix when that name is published or its directory exists —
+    * a version a `-rebuild` reloads may be the published one or in its
+    * chain, and a crashed or kept (`-keep-files`) load leaves its directory
+    * behind. Staging never writes into an existing directory: a reader of
+    * a published chain may be scanning it, and a failed load's discard
+    * would delete it. Existing directories stay prunable by `-m`. */
+  private def freshName(version: String): String = {
+    val current = currentVersion
+    val base = s"v_$version"
+    (Iterator.single(base) ++ Iterator.from(1).map(i => s"${base}_r$i"))
+      .find(n => !current.contains(n) && !fs.exists(dir(n)))
+      .get
   }
 
   def stage(df: DataFrame, version: String): String = {
-    // NEVER stage into the live published directory: a -rebuild reloads the
-    // dataset the current version came from, and writing v_X in place while
-    // _CURRENT names it would corrupt concurrent readers — and a failed
-    // load's discard() would then DELETE the published table. Re-staging a
-    // published version gets a fresh suffixed directory instead; the old
-    // one becomes prunable once the new publish swaps the pointer.
-    val base = s"v_$version"
-    val current = currentVersion
-    val name =
-      if (!current.contains(base)) base
-      else Iterator.from(1).map(i => s"${base}_r$i")
-        .find(n => !current.contains(n) && !fs.exists(new Path(tableDir, n)))
-        .get
-    df.write.mode("overwrite").parquet(new Path(tableDir, name).toString)
+    val name = freshName(version)
+    df.write.mode("overwrite").parquet(dir(name).toString)
     name
   }
+
+  /** Stage a change set as a delta version on top of the published chain
+    * (a full published version becomes the base of a new chain), or, by the
+    * compaction rule in the class doc, as a complete version. The delta's
+    * one Spark job writes `added`; `removedKeys` is collected from the
+    * driver and written there with the manifest. */
+  override def stage(added: DataFrame, removedKeys: DataFrame, key: String,
+      version: String): String = {
+    val integerKey = added.schema(key).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    // a full published version becomes the base of a new chain; its
+    // schema is read once here, then carried by every manifest
+    def newChain(v: String) = Chain(key, Layer(v, parquet(v).schema), Nil)
+    currentVersion.filter(_ => integerKey)
+      .map(v => chainOf(v).getOrElse(newChain(v)))
+      .filter(c => c.key == key && !compacts(c))
+      .fold(super.stage(added, removedKeys, key, version)) { c =>
+        val name = freshName(version)
+        added.write.mode("overwrite").parquet(dir(name).toString)
+        writeText(name, RemovedFile,
+          removedKeys.collect().map(_.get(0)).distinct.map(k => s"$k\n").mkString)
+        writeText(name, ChainFile,
+          c.copy(deltas = c.deltas :+ Layer(name, added.schema)).render)
+        name
+      }
+  }
+
+  private def compacts(c: Chain): Boolean = {
+    def bytes(l: Layer) = fs.getContentSummary(dir(l.version)).getLength
+    c.deltas.size >= MaxDeltas ||
+      (c.deltas.nonEmpty && c.deltas.map(bytes).sum * 4 > bytes(c.base))
+  }
+
+  private def writeText(version: String, name: String, text: String): Unit =
+    ControlStore.replaceFile(conf, new Path(dir(version), name), s".$name.tmp",
+      text.getBytes("UTF-8"))
 
   /** Publish a staged version: write `stagedName` to a `_CURRENT.tmp.*`
     * sibling and rename it onto `_CURRENT` ([[ControlStore.replaceFile]]).
@@ -103,13 +215,14 @@ final class ParquetTableSink(
     * HDFS it is an atomic `FileContext` OVERWRITE rename. Either way there
     * is never an instant with no published version (a delete-then-rename
     * window would make a concurrent reader see the table vanish and a
-    * crash strand it pointerless). */
+    * crash strand it pointerless). A delta version's chain is fixed when it
+    * is staged, so this one rename publishes it too. */
   def publish(stagedName: String): Unit =
-    ControlStore.replaceFile(spark.sparkContext.hadoopConfiguration, currentPtr,
+    ControlStore.replaceFile(conf, currentPtr,
       s"_CURRENT.tmp.$stagedName", stagedName.getBytes("UTF-8"))
 
   def discard(stagedName: String): Unit = {
-    if (!keepFiles) fs.delete(new Path(tableDir, stagedName), true)
+    if (!keepFiles) fs.delete(dir(stagedName), true)
     ()
   }
 
@@ -117,9 +230,10 @@ final class ParquetTableSink(
     * post-run `VACUUM ANALYSE` (`maintain`, lib/LINZ/BdeDatabase.pm:400-405):
     * every publish leaves the previous version directory behind (that is
     * what makes publish an atomic pointer swap), so a daily-load table
-    * accumulates one full copy per load. Deletes all version dirs except
-    * the published one plus the `keepPrevious` most recent others (kept for
-    * in-flight readers that resolved `_CURRENT` just before a swap).
+    * accumulates versions. Deletes all version dirs except the published
+    * one plus the `keepPrevious` most recent others (kept for in-flight
+    * readers that resolved `_CURRENT` just before a swap), and except every
+    * base and delta that the chains of those versions name.
     * Returns the names removed. */
   def pruneVersions(keepPrevious: Int = 1): Seq[String] = {
     require(keepPrevious >= 0)
@@ -134,9 +248,51 @@ final class ParquetTableSink(
       // which for dataset-named versions sorts chronologically
       .sortBy { case (n, t) => (-t, n) }(
         Ordering.Tuple2(Ordering.Long, Ordering.String.reverse))
-    val doomed = versions.drop(keepPrevious).map(_._1)
-    doomed.foreach(n => f.delete(new Path(tableDir, n), true))
+      .map(_._1)
+    val (kept, older) = versions.splitAt(keepPrevious)
+    val referenced = (current.toSeq ++ kept).flatMap(versionsRead).toSet
+    val doomed = older.filterNot(referenced)
+    doomed.foreach(n => f.delete(dir(n), true))
     doomed.toSeq
+  }
+}
+
+object ParquetTableSink {
+  /** A chain holds at most this many deltas; the next load compacts it. */
+  val MaxDeltas = 8
+
+  private val ChainFile = "_CHAIN"
+  private val RemovedFile = "_REMOVED"
+
+  /** A version directory of a chain and the schema its files carry
+    * (recorded, so that reading a chain infers no schema). */
+  private final case class Layer(version: String, schema: StructType)
+
+  /** A delta version's manifest: the table key, the base full version and
+    * the deltas, oldest first; the last delta is the version itself. One
+    * line each: `key <column>`, `base <dir> <schema json>`, `delta <dir>
+    * <schema json>`. */
+  private final case class Chain(key: String, base: Layer, deltas: Seq[Layer]) {
+    def layers: Seq[Layer] = base +: deltas
+    def render: String = (s"key $key" +: s"base ${line(base)}" +:
+      deltas.map(d => s"delta ${line(d)}")).mkString("", "\n", "\n")
+    private def line(l: Layer) = s"${l.version} ${l.schema.json}"
+  }
+
+  private object Chain {
+    def parse(text: String): Chain = {
+      val fields = text.linesIterator.filter(_.nonEmpty).map { l =>
+        val Array(k, v) = l.split(" ", 2); k -> v
+      }.toSeq
+      def layer(v: String) = {
+        val Array(version, schema) = v.split(" ", 2)
+        Layer(version, DataType.fromJson(schema).asInstanceOf[StructType])
+      }
+      def one(k: String) = fields.collectFirst { case (`k`, v) => v }
+        .getOrElse(throw new IllegalStateException(s"$ChainFile has no $k line"))
+      Chain(one("key"), layer(one("base")),
+        fields.collect { case ("delta", v) => layer(v) })
+    }
   }
 }
 

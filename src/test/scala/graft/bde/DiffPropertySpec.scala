@@ -2,6 +2,8 @@ package graft.bde
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -60,9 +62,9 @@ class DiffPropertySpec extends SparkSuite {
         (if (r.isNullAt(1)) None else Some(r.getInt(1))), r.getString(2))
     }.toMap
 
-  private def run(prop: Prop): Unit = {
+  private def run(prop: Prop, cases: Int = 25): Unit = {
     val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(25), prop)
+      SCTest.Parameters.default.withMinSuccessfulTests(cases), prop)
     assert(res.passed, res.status.toString)
   }
 
@@ -169,5 +171,108 @@ class DiffPropertySpec extends SparkSuite {
         (stats == refStats) :| s"stats: $stats vs $refStats (cur $cur, inc $inc, chg $chg)" &&
         (!s.aborted) :| "no tolerance set: never aborts"
     })
+  }
+
+  // ---- level-5 chains on a ParquetTableSink vs full rewrites ------------
+
+  private type Rows = Seq[(Long, URow)]
+
+  /** One level-5 step: increment rows and change keys. Keys 1..12 may be
+    * in the increment and 1..14 changed, in every step, so later steps
+    * re-insert deleted keys, delete and update keys an earlier delta added,
+    * and swap unique codes with rows of earlier steps. A quarter of the
+    * steps repeat up to two increment keys with another value. */
+  private val genStep: Gen[(Rows, List[Long])] = for {
+    incKeys <- Gen.someOf(1L to 12L)
+    inc <- genURows(incKeys.toSeq)
+    dups <- Gen.frequency(3 -> Gen.const(Nil), 1 -> Gen.someOf(inc.toSeq).map(
+      _.take(2).map { case (k, (u, v)) => k -> ((u, v + "2")) }))
+    chg <- Gen.listOf(Gen.choose(1L, 14L))
+  } yield (inc.toSeq ++ dups, chg)
+
+  private val genChain: Gen[(Map[Long, URow], List[(Rows, List[Long])])] = for {
+    curKeys <- Gen.someOf(1L to 8L)
+    cur <- genURows(curKeys.toSeq)
+    steps <- Gen.listOfN(10, genStep)
+  } yield (cur, steps)
+
+  private def rowsDf(t: Rows): DataFrame =
+    t.map { case (k, (u, v)) => (k, u.orNull, v) }.toDF("k", "u", "v")
+
+  private def sortedRows(d: DataFrame): Seq[(Long, Option[String], String)] =
+    d.collect().map(r => (r.getLong(0), Option(r.getString(1)), r.getString(2)))
+      .toSeq.sorted
+
+  test("level5Apply chains of deltas match full rewrites after every step, across compaction") {
+    val cols = Seq("k" -> "bigint", "u" -> "varchar", "v" -> "varchar")
+    val changeCols = Seq("id" -> "integer", "tablename" -> "varchar",
+      "tablekeyvalue" -> "bigint", "action" -> "char")
+    val caseNo = new java.util.concurrent.atomic.AtomicInteger
+    // per chain, the number of deltas the published version reads after each step
+    val depths = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]
+    run(Prop.forAllNoShrink(genChain) { case (cur, steps) =>
+      val dir = Files.createTempDirectory("l5-chain-prop")
+      val tableDir = dir.resolve("tables/t_prop")
+      val sink = new ParquetTableSink(spark, dir.resolve("tables").toString, "t_prop")
+      // every other chain pads its base with 5000 rows of incompressible
+      // values that no step touches, so that its deltas stay under a quarter
+      // of the base's bytes and the chain compacts by the delta count; the
+      // bare base compacts by bytes
+      def uuid(s: String) = java.util.UUID.nameUUIDFromBytes(s.getBytes).toString
+      val padding: Rows =
+        if (caseNo.getAndIncrement() % 2 == 1) Nil
+        else (0 until 5000).map(i => (1000L + i, (None, uuid(s"a$i") + uuid(s"b$i"))))
+      var ref: Rows = cur.toSeq ++ padding
+      sink.replace(rowsDf(ref), "0")
+      val chainDepths = Seq.newBuilder[Int]
+      val props = steps.zipWithIndex.map { case ((inc, chg), i) =>
+        val incFile = dir.resolve(s"inc$i.crs")
+        Files.writeString(incFile, OrchestratorScenario.crs("t_prop", cols,
+          inc.map { case (k, (u, v)) => s"$k|${u.getOrElse("")}|$v|" }))
+        val chgFile = dir.resolve(s"chg$i.crs")
+        Files.writeString(chgFile, OrchestratorScenario.crs("xchg", changeCols,
+          "1|t_other|3|U|" +:
+            chg.zipWithIndex.map { case (k, j) => s"${j + 2}|T_PROP|$k|U|" }))
+
+        // today's full rewrite of the reference table
+        val refDf = rowsDf(ref)
+        val incDf = BdeFormat.readFile(spark, incFile.toString)
+        val refActions = Diff.classifyChanges(refDf, incDf, chg.toDF("k"), "k",
+          uniqueCols = Seq("u"), repairKeySwaps = true)
+        val refCounts = refActions.collect().groupMapReduce(_.getString(1))(_ => 1L)(_ + _)
+        def n(a: String) = refCounts.getOrElse(a, 0L)
+        val refNext = sortedRows(Diff.applyActions(refDf, incDf, refActions, "k"))
+        // the gate's counts, as a warning tolerance no count meets reports them
+        val refGate =
+          if (chg.isEmpty || ref.isEmpty) Nil
+          else Seq(s"table count ${refNext.size} below warning tolerance of old count ${ref.size}")
+
+        val s = Loader.level5Apply(spark, sink, Seq(incFile.toString),
+          L5Slice.localChanges(spark, chgFile.toString),
+          "t_prop", "k", (i + 1).toString, uniqueCols = Seq("u"),
+          tolWarning = Some(1e9), maxFileErrors = Some(0))
+        val loaded = sortedRows(sink.read())
+        ref = refNext.map { case (k, u, v) => (k, (u, v)) }
+        chainDepths += sink.currentVersion.map(v => tableDir.resolve(s"$v/_CHAIN"))
+          .filter(Files.exists(_))
+          .fold(0)(m => Files.readAllLines(m).asScala.count(_.startsWith("delta ")))
+        val stats = (s.ninsert, s.nupdate, s.nnullupdate, s.ndelete)
+        val refStats = (n("I"), n("U") + n("X"), n("0"), n("D"))
+        val where = s"step ${i + 1} (cur $cur, steps $steps)"
+        (loaded == refNext) :| s"rows at $where: $loaded vs $refNext" &&
+          (stats == refStats) :| s"stats at $where: $stats vs $refStats" &&
+          (s.warnings == refGate) :| s"gate counts at $where: ${s.warnings} vs $refGate" &&
+          (!s.aborted) :| "no error tolerance set: never aborts"
+      }
+      depths.add(chainDepths.result())
+      props.reduce(_ && _)
+    }, cases = 4)
+    // the chains reached the delta-count limit, and compacted past it
+    val seen = depths.asScala.toSeq
+    assert(seen.exists(_.contains(ParquetTableSink.MaxDeltas)), s"chain depths: $seen")
+    assert(seen.exists(_.sliding(2).exists(d => d.head == ParquetTableSink.MaxDeltas && d.last == 0)),
+      s"no compaction at the delta-count limit: $seen")
+    assert(seen.exists(_.sliding(2).exists(d => d.head > 0 && d.head < ParquetTableSink.MaxDeltas &&
+      d.last == 0)), s"no compaction by bytes: $seen")
   }
 }

@@ -225,50 +225,248 @@ class LoaderSpec extends SparkSuite with TimeLimits {
     }
   }
 
+  /** Run `body`, recording the description of every Spark job it starts
+    * and the plan of every SQL execution. */
+  private def withJobs[A](body: => A): (A, Seq[String], Seq[SparkPlanInfo]) = {
+    val marker = "level5-job-count-marker"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(e.stageInfos.map(_.name).mkString(" | ")))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val a = try {
+      val a = body
+      // listener events arrive in order: once the marker job is seen, every
+      // job of the body has been counted
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      while (!jobs.contains(marker)) Thread.sleep(20)
+      a
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (a, jobs.asScala.takeWhile(_ != marker).toSeq, plans.asScala.toSeq)
+  }
+
+  private def scans(p: SparkPlanInfo): Seq[String] =
+    p.metadata.get("Location").toSeq ++ p.children.flatMap(scans)
+
+  private def isWrite(p: SparkPlanInfo): Boolean =
+    p.nodeName.contains("InsertIntoHadoopFsRelation") || p.children.exists(isWrite)
+
   test("level-5 load runs a bounded number of Spark jobs and never re-reads the staged version") {
     failAfter(3.minutes) {
       val (dir, sink) = loadedSlice()
       val inc = L5Slice.dataFile(dir, "l5.crs", L5Slice.l5Rows)
       val chg = L5Slice.localChanges(spark,
         L5Slice.changeFile(dir, L5Slice.changes))
-      val marker = "level5-job-count-marker"
-      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          jobs.add(Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse(""))
-        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-          case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
-          case _ =>
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val s = try {
-        val s = Loader.level5Apply(spark, sink, Seq(inc), chg, L5Slice.Table,
+      val (s, jobs, plans) = withJobs(
+        Loader.level5Apply(spark, sink, Seq(inc), chg, L5Slice.Table,
           L5Slice.Key, L5Slice.L5Version, uniqueCols = Seq("lin_id"),
-          tolError = Some(0.20), tolWarning = Some(0.95), maxFileErrors = Some(0))
-        // listener events arrive in order: once the marker job is seen, every
-        // job of the load has been counted
-        spark.sparkContext.setJobDescription(marker)
-        try spark.sparkContext.parallelize(Seq(1), 1).count()
-        finally spark.sparkContext.setJobDescription(null)
-        while (!jobs.contains(marker)) Thread.sleep(20)
-        s
-      } finally spark.sparkContext.removeSparkListener(listener)
+          tolError = Some(0.20), tolWarning = Some(0.95), maxFileErrors = Some(0)))
       assert(stats(s) == ((3L, 2L, 0L, 1L)))
-      val loadJobs = jobs.asScala.takeWhile(_ != marker).size
+      val loadJobs = jobs.size
       // the change-set-sized sets are collected once and broadcast from the
-      // driver; the counts ride on the staged write. A bare count() or a
-      // second classification pass pushes this over the bound.
+      // driver; the counts ride on the classify scan and the staged write. A
+      // bare count() or a second classification pass pushes this over the
+      // bound.
       assert(loadJobs <= 15, s"level-5 load ran $loadJobs Spark jobs")
-      def scans(p: SparkPlanInfo): Seq[String] =
-        p.metadata.get("Location").toSeq ++ p.children.flatMap(scans)
-      val stagedScans = plans.asScala.toSeq.flatMap(scans)
+      val stagedScans = plans.flatMap(scans)
         .filter(_.contains(s"v_${L5Slice.L5Version}"))
       assert(stagedScans.isEmpty, s"the staged version was re-read: $stagedScans")
       assert(rows(sink.read()).map(_.last) == L5Slice.finalKeys)
+    }
+  }
+
+  /** A second increment on top of the slice's: 300 updated, 400 deleted,
+    * 500 inserted. */
+  private val l5bRows = Seq("4457326|3|11960041|Y|100|",
+    "4457329|44|10000000|Y|300|", "4457331|6|30000000|Y|500|")
+  private val l5bChanges = Seq(300 -> "U", 400 -> "D", 500 -> "I")
+  private val l5bVersion = "20170630000000"
+
+  /** Keys of the padding rows start here. */
+  private val PadKey = 1000000000
+
+  /** The slice's rows of `d`, without the padding. */
+  private def sliceRows(d: DataFrame) = rows(d.where(col(L5Slice.Key) < PadKey))
+
+  /** The slice after its level-5 load: a base plus one delta. The base
+    * carries 2000 padding rows, which no change touches, so that the
+    * deltas stay under a quarter of its bytes and the next load adds a
+    * delta rather than compacting. */
+  private def chainedSlice(): (Path, ParquetTableSink) = {
+    val dir = Files.createTempDirectory("l5-chain")
+    val sink = new ParquetTableSink(spark, dir.resolve("tables").toString,
+      L5Slice.Table)
+    val padding = (0 until 2000).map(i =>
+      s"${5000000 + i}|1|${200000000 + i}|Y|${PadKey + i}|")
+    Loader.level0Replace(spark, sink,
+      Seq(L5Slice.dataFile(dir, "l0.crs", L5Slice.l0Rows ++ padding)), L5Slice.L0Version)
+    val s = Loader.level5Apply(spark, sink,
+      Seq(L5Slice.dataFile(dir, "l5.crs", L5Slice.l5Rows)),
+      L5Slice.localChanges(spark, L5Slice.changeFile(dir, L5Slice.changes)),
+      L5Slice.Table, L5Slice.Key, L5Slice.L5Version, uniqueCols = Seq("lin_id"))
+    assert(stats(s) == ((3L, 2L, 0L, 1L)))
+    assert(sink.currentVersion.contains(s"v_${L5Slice.L5Version}"))
+    assert(Files.exists(tableDir(dir).resolve(s"v_${L5Slice.L5Version}/_CHAIN")))
+    (dir, sink)
+  }
+
+  private def tableDir(dir: Path): Path = dir.resolve(s"tables/${L5Slice.Table}")
+
+  test("level-5 load over a base plus one delta: bounded jobs, and its staged write scans no published directory") {
+    failAfter(3.minutes) {
+      val (dir, sink) = chainedSlice()
+      val inc = L5Slice.dataFile(dir, "l5b.crs", l5bRows)
+      val chg = L5Slice.localChanges(spark, L5Slice.changeFile(dir, l5bChanges))
+      val (s, jobs, plans) = withJobs(
+        Loader.level5Apply(spark, sink, Seq(inc), chg, L5Slice.Table,
+          L5Slice.Key, l5bVersion, uniqueCols = Seq("lin_id"),
+          tolError = Some(0.20), tolWarning = Some(0.95), maxFileErrors = Some(0)))
+      assert(stats(s) == ((1L, 1L, 0L, 1L)))
+      assert(s.warnings.isEmpty)
+      assert(jobs.size <= 15, s"level-5 load over a chain ran ${jobs.size} Spark jobs")
+      val published = Seq(s"v_${L5Slice.L0Version}", s"v_${L5Slice.L5Version}")
+      val writes = plans.filter(isWrite)
+      assert(writes.size == 1, s"expected one staged write, saw ${writes.size}")
+      val publishedScans = writes.flatMap(scans).filter(l => published.exists(l.contains))
+      assert(publishedScans.isEmpty, s"the staged write scanned published data: $publishedScans")
+      assert(sink.currentVersion.contains(s"v_$l5bVersion"))
+      assert(sliceRows(sink.read()).map(_.last) == Seq(100, 300, 500, 80401148, 80401149))
+      assert(sliceRows(sink.read()).find(_.last == 300).map(_(1)).contains(44))
+    }
+  }
+
+  test("level-5 tolerance abort on a chained version discards the staged delta; the chain stays readable") {
+    failAfter(2.minutes) {
+      val (dir, sink) = chainedSlice()
+      val before = rows(sink.read())
+      // two deletes leave 2003 of 2005 rows: below ceil(2005 * 0.9995)
+      val chg = L5Slice.localChanges(spark,
+        L5Slice.changeFile(dir, Seq(400 -> "D", 80401148 -> "D")))
+      val s = Loader.level5Apply(spark, sink,
+        Seq(L5Slice.dataFile(dir, "l5b.crs", l5bRows)), chg, L5Slice.Table,
+        L5Slice.Key, l5bVersion, tolError = Some(0.9995))
+      assert(s.aborted)
+      assert(s.abortReason == "table count 2003 below error tolerance of old count 2005")
+      assert(sink.currentVersion.contains(s"v_${L5Slice.L5Version}"))
+      assert(!Files.exists(tableDir(dir).resolve(s"v_$l5bVersion")))
+      assert(rows(sink.read()) == before)
+    }
+  }
+
+  test("a plain version directory written without a manifest reads and takes a delta on top") {
+    failAfter(2.minutes) {
+      val dir = Files.createTempDirectory("l5-plain")
+      val t = tableDir(dir)
+      // a version as every earlier release wrote it: parquet files and a
+      // `_CURRENT` naming their directory, nothing else
+      L5Slice.l0Rows.map(_.split('|').toSeq).map(r =>
+        (r(0).toInt, r(1).toInt, r(2).toInt, r(3), r(4).toInt))
+        .toDF("pri_id", "sequence", "lin_id", "reversed", "audit_id")
+        .write.parquet(t.resolve("v_old").toString)
+      Files.writeString(t.resolve("_CURRENT"), "v_old")
+      val sink = new ParquetTableSink(spark, dir.resolve("tables").toString, L5Slice.Table)
+      assert(sink.read().count() == 3)
+      val s = Loader.level5Apply(spark, sink,
+        Seq(L5Slice.dataFile(dir, "l5.crs", L5Slice.l5Rows)),
+        L5Slice.localChanges(spark, L5Slice.changeFile(dir, L5Slice.changes)),
+        L5Slice.Table, L5Slice.Key, L5Slice.L5Version, uniqueCols = Seq("lin_id"))
+      assert(stats(s) == ((3L, 2L, 0L, 1L)))
+      assert(Files.readString(t.resolve(s"v_${L5Slice.L5Version}/_CHAIN")).contains("base v_old"))
+      assert(rows(sink.read()).map(_.last) == L5Slice.finalKeys)
+    }
+  }
+
+  test("a staged delta never published leaves the old version; the rerun publishes under _r1") {
+    failAfter(2.minutes) {
+      val (dir, sink) = chainedSlice()
+      val before = rows(sink.read())
+      val inc = L5Slice.dataFile(dir, "l5b.crs", l5bRows)
+      val chg = L5Slice.localChanges(spark, L5Slice.changeFile(dir, l5bChanges))
+      // a crash between staging and the `_CURRENT` rename: the delta's
+      // directory is complete but never published
+      val crashed = sink.stage(
+        spark.read.parquet(tableDir(dir).resolve(s"v_${L5Slice.L5Version}").toString)
+          .where(col(L5Slice.Key) === 100),
+        Seq(300, 400).toDF(L5Slice.Key), L5Slice.Key, l5bVersion)
+      assert(crashed == s"v_$l5bVersion")
+      assert(sink.currentVersion.contains(s"v_${L5Slice.L5Version}"))
+      assert(rows(sink.read()) == before)
+      val s = Loader.level5Apply(spark, sink, Seq(inc), chg, L5Slice.Table,
+        L5Slice.Key, l5bVersion, uniqueCols = Seq("lin_id"))
+      assert(stats(s) == ((1L, 1L, 0L, 1L)))
+      assert(sink.currentVersion.contains(s"v_${l5bVersion}_r1"))
+      assert(sliceRows(sink.read()).map(_.last) == Seq(100, 300, 500, 80401148, 80401149))
+      assert(Files.readString(tableDir(dir).resolve(s"v_${l5bVersion}_r1/_CHAIN"))
+        .linesIterator.map(_.split(' ').take(2).mkString(" ")).toSeq ==
+        Seq(s"key ${L5Slice.Key}", s"base v_${L5Slice.L0Version}",
+          s"delta v_${L5Slice.L5Version}", s"delta v_${l5bVersion}_r1"))
+    }
+  }
+
+  test("pruneVersions never deletes a base or delta that a kept version reads") {
+    failAfter(2.minutes) {
+      val (dir, sink) = chainedSlice()
+      val s = Loader.level5Apply(spark, sink,
+        Seq(L5Slice.dataFile(dir, "l5b.crs", l5bRows)),
+        L5Slice.localChanges(spark, L5Slice.changeFile(dir, l5bChanges)),
+        L5Slice.Table, L5Slice.Key, l5bVersion)
+      assert(!s.aborted)
+      val expected = rows(sink.read())
+      // an unreferenced leftover, older than the chain
+      val stale = tableDir(dir).resolve("v_20000101000000")
+      spark.range(1).write.parquet(stale.toString)
+      Files.setLastModifiedTime(stale, java.nio.file.attribute.FileTime.fromMillis(0))
+      // the published version is a delta reading the base and the first
+      // delta: nothing it names goes, whatever keepPrevious is
+      assert(sink.pruneVersions(keepPrevious = 0) == Seq("v_20000101000000"))
+      assert(rows(sink.read()) == expected)
+      assert(sink.pruneVersions(keepPrevious = 1).isEmpty)
+      // after a full version replaces the chain, keepPrevious = 1 keeps the
+      // previous version's chain for in-flight readers, and 0 drops it
+      sink.replace(sink.read(), "20170701000000")
+      assert(sink.pruneVersions(keepPrevious = 1).isEmpty)
+      assert(sink.pruneVersions(keepPrevious = 0).toSet == Set(
+        s"v_${L5Slice.L0Version}", s"v_${L5Slice.L5Version}", s"v_$l5bVersion"))
+      assert(rows(sink.read()) == expected)
+    }
+  }
+
+  test("a reader polling read().count() through 50 delta publishes sees only published counts") {
+    failAfter(5.minutes) {
+      val dir = Files.createTempDirectory("l5-poll")
+      val sink = new ParquetTableSink(spark, dir.toString, "t_poll")
+      // a base large enough that only the delta-count rule compacts
+      sink.replace(spark.range(0, 100000).toDF("id"), "0")
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+      val reader = new Thread(() =>
+        try while (!stop.get) seen.add(sink.read().count())
+        catch { case e: Throwable => failure.set(e) })
+      reader.start()
+      // publish i adds two new keys and removes key i: every published
+      // version holds 100000 + i rows
+      try (1 to 50).foreach { i =>
+        sink.publish(sink.stage(Seq(100000L + 2 * i, 100001L + 2 * i).toDF("id"),
+          Seq(i.toLong).toDF("id"), "id", i.toString))
+      } finally { stop.set(true); reader.join() }
+      assert(failure.get == null, s"reader failed: ${failure.get}")
+      val counts = seen.asScala.map(_.longValue).toSeq
+      assert(counts.nonEmpty)
+      assert(counts.forall(c => c >= 100000 && c <= 100050), counts.distinct.sorted)
+      assert(counts == counts.sorted, "a reader saw a version older than one it had seen")
+      assert(sink.read().count() == 100050)
+      assert(sink.read().where(col("id") <= 50).count() == 1)
     }
   }
 
