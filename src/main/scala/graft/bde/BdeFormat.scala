@@ -1,6 +1,6 @@
 package graft.bde
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -183,14 +183,10 @@ object BdeFormat {
       header: BdeHeader,
       dropMalformed: Boolean = false,
       malformedObs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
-    val ncols = header.columns.size
-    // A well-formed data line has exactly one '|' per field (the format ends
-    // every field, including the last, with the delimiter).
-    val pipes = length(col("value")) - length(translate(col("value"), "|", ""))
     val lines0 = dataLines(spark, path, header).toDF("value")
     val observed = malformedObs.fold(lines0)(obs =>
-      lines0.observe(obs, count(when(pipes =!= ncols, 1)).as("malformed")))
-    val lines = if (dropMalformed) observed.where(pipes === ncols) else observed
+      lines0.observe(obs, count(when(malformed(header), 1)).as("malformed")))
+    val lines = if (dropMalformed) observed.where(!malformed(header)) else observed
     // Parse with a native split: BDE data is never quoted or escaped, so a
     // pipe split IS the full parse. Unlike `spark.read.csv(Dataset[String])`
     // — which compiles its input into an opaque LogicalRDD, severing any
@@ -236,6 +232,16 @@ object BdeFormat {
       .filter(_.nonEmpty)
       .toDS()
   }
+
+  /** Whether a raw data line is malformed: a well-formed one has exactly one
+    * '|' per field (the format ends every field, including the last, with
+    * the delimiter). */
+  private def malformed(header: BdeHeader): Column =
+    length(col("value")) - length(translate(col("value"), "|", "")) =!= header.columns.size
+
+  /** The malformed data lines of `path`, counted in a scan of their own. */
+  def countMalformed(spark: SparkSession, path: String, header: BdeHeader): Long =
+    dataLines(spark, path, header).toDF("value").where(malformed(header)).count()
 
   /** One-call convenience: parse header + read data. */
   def readFile(spark: SparkSession, path: String): DataFrame =

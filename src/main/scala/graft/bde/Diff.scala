@@ -44,16 +44,21 @@ import org.apache.spark.sql.functions._
  * [[classifyChanges]]. Each is bounded by the day's delta, as the
  * reference's `_tmp_inc_change`/`_tmp_inc_actions` temp tables are, and
  * passed back in as a driver-local relation it broadcasts straight from
- * the driver. The current table, the increment rows and the full-snapshot
- * diff of [[fullDiff]] (as large as the table) stay distributed.
+ * the driver. The current table and the increment rows stay distributed.
+ *
+ * The level-0 diff has no change set: its action set can be as large as
+ * the table, so nothing of it is collected, cached or broadcast.
+ * [[applySnapshot]] is its apply in one full-outer join of the table and the
+ * snapshot (a shuffle of each, no broadcast), whose kept rows are the new
+ * version; the loader counts the actions on that join.
  *
  * What an apply writes: an action set comes down to one step of
  * [[merge]], the increment rows it adds and the keys whose current rows
- * it removes ([[changes]]), both sized by the change set. The level-0 diff
- * and a sink without deltas stage the merged table in full. A level-5 load
- * on a [[ParquetTableSink]] stores just the step as a delta, and the
- * sink's read folds the base and every delta through the same [[merge]],
- * so a version reads the same either way.
+ * it removes ([[changes]]), both sized by the change set. A sink without
+ * deltas stages the merged table in full. A level-5 load on a
+ * [[ParquetTableSink]] stores just the step as a delta, and the sink's read
+ * folds the base and every delta through the same [[merge]], so a version
+ * reads the same either way.
  */
 object Diff {
 
@@ -160,24 +165,64 @@ object Diff {
           .as("action"))
   }
 
+  /** The full-outer join of the current rows (`l`) and the snapshot rows
+    * (`r`) on `key`: plain equality, so a NULL key matches nothing. */
+  private def snapshotJoin(cur: DataFrame, next: DataFrame, key: String): DataFrame =
+    cur.as("l").join(next.as("r"), col(s"l.$key") === col(s"r.$key"), "full_outer")
+
+  /** The diff action of a row of [[snapshotJoin]]: right-only → 'I',
+    * left-only → 'D', both with any column of `next` changed → 'U', NULL
+    * when unchanged. A NULL key on either side is right-only or left-only by
+    * its NULL, and so is an 'I'. */
+  private def snapshotAction(next: DataFrame, key: String): Column =
+    when(col(s"l.$key").isNull, ActionInsert)
+      .when(col(s"r.$key").isNull, ActionDelete)
+      .when(anyDiffer("l", "r", next.columns.filter(_ != key).toSeq), ActionUpdate)
+
   /**
    * J4 — full-table diff of two snapshots (`ver_apply_table_differences`,
    * sql:1914-1948): full outer join on the key; right-only → 'I',
    * left-only → 'D', both with any column changed → 'U'. Unchanged rows are
    * NOT emitted (the reference's differ only returns real changes).
    */
-  def fullDiff(cur: DataFrame, next: DataFrame, key: String): DataFrame = {
-    val compareCols = next.columns.filter(_ != key).toSeq
-    val l = cur.as("l")
-    val r = next.as("r")
-    l.join(r, col(s"l.$key") === col(s"r.$key"), "full_outer")
+  def fullDiff(cur: DataFrame, next: DataFrame, key: String): DataFrame =
+    snapshotJoin(cur, next, key)
       .select(
         coalesce(col(s"l.$key"), col(s"r.$key")).as(key),
-        when(col(s"l.$key").isNull, ActionInsert)
-          .when(col(s"r.$key").isNull, ActionDelete)
-          .when(anyDiffer("l", "r", compareCols), ActionUpdate)
-          .as("action"))
+        snapshotAction(next, key).as("action"))
       .where(col("action").isNotNull)
+
+  /** The columns [[applySnapshot]] adds to the table's. */
+  val SnapshotAction = "_snapshot_action"
+  val InCur = "_snapshot_in_cur"
+  val InNext = "_snapshot_in_next"
+  val Kept = "_snapshot_kept"
+
+  /**
+   * J4 applied in one pass: what `applyActions(cur, next, fullDiff(cur,
+   * next, key), key)` stages, from the one [[fullDiff]] join, with no action
+   * set, no second scan and no broadcast. Per join row: the table's columns
+   * in `cur`'s order from the side the apply keeps (typed as its union
+   * widens them), the [[fullDiff]] action as [[SnapshotAction]] (NULL when
+   * unchanged), whether the row has a current and a snapshot side
+   * ([[InCur]], [[InNext]]), and whether the apply keeps it ([[Kept]]): the
+   * current row of an unchanged or NULL key (a NULL key matches nothing and
+   * is no removed key), the snapshot row of an inserted or updated key (a
+   * NULL snapshot key is no added key). This is the apply's result when each
+   * side's keys are unique. A key repeated on one side and present on the
+   * other joins the other side's row more than once, so that side has more
+   * present than input rows; callers compare the two.
+   */
+  def applySnapshot(cur: DataFrame, next: DataFrame, key: String): DataFrame = {
+    val action = snapshotAction(next, key)
+    val inCur = col(s"l.$InCur").isNotNull
+    val fromCur = action.isNull || (inCur && col(s"l.$key").isNull)
+    val fromNext = col(s"r.$key").isNotNull && action.isNotNull
+    snapshotJoin(cur.withColumn(InCur, lit(true)), next.withColumn(InNext, lit(true)), key)
+      .select(cur.columns.toSeq.map(c =>
+        when(fromCur, col(s"l.$c")).otherwise(col(s"r.$c")).as(c)) ++ Seq(
+        action.as(SnapshotAction), inCur.as(InCur), col(s"r.$InNext").isNotNull.as(InNext),
+        (fromCur || fromNext).as(Kept)): _*)
   }
 
   /**
@@ -193,9 +238,9 @@ object Diff {
     // The action set feeds TWO key derivations here, so an `actions`
     // lineage that runs the classify pipeline (itself two scans of the big
     // tables) must be materialized first: the level-5 loader passes its
-    // collected pairs as a driver-local relation, the level-0 diff a cached
-    // frame (caching here instead would leak: this function returns lazy
-    // frames and never sees the consuming action).
+    // collected pairs as a driver-local relation (caching here instead would
+    // leak: this function returns lazy frames and never sees the consuming
+    // action). An uncollected lineage is evaluated once per derivation.
     val acts = actions.select(col(key), col("action"))
     def keysOf(as: String*) = acts.where(col("action").isin(as: _*)).select(col(key))
     val added = inc.join(

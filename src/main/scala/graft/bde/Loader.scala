@@ -2,7 +2,7 @@ package graft.bde
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -20,9 +20,10 @@ import org.apache.spark.sql.types.StructType
  *  - [[level5Apply]]    = E2, `bde_ApplyLevel5Update` (sql:1576-1818):
  *    change-table-driven classify, then only the change set is staged (a
  *    delta on a [[ParquetTableSink]]).
- *  - [[level0Incremental]] = E3 (sql:1887-1948): full-outer diff of the new
- *    snapshot vs current, then the same apply, staged in full (also the
- *    `l5_is_full` arm — a level-5 dataset whose files are full snapshots).
+ *  - [[level0Incremental]] = E3 (sql:1887-1948): one full-outer join of the
+ *    new snapshot and the current table, which counts the diff's actions
+ *    and is itself the new version, staged in full (also the `l5_is_full`
+ *    arm — a level-5 dataset whose files are full snapshots).
  *
  * The row-count tolerance check is an ABORT GATE exactly as in the
  * reference (`_bde_CheckTableCount`, sql:2006-2085, called before the
@@ -31,8 +32,9 @@ import org.apache.spark.sql.types.StructType
  * (`max_file_errors`, conf/linz_bde_uploader.conf:370-376) aborts the
  * table when malformed rows exceed it; within budget, malformed rows are
  * dropped and counted, as bde_copy does. Each load checks the budget
- * first, then (level 5) exits early on zero change keys, then applies the
- * tolerance; nothing is published after a budget breach.
+ * first, then (level 5) exits early on zero change keys or (level-0 diff)
+ * fails on a repeated key, then applies the tolerance; nothing is
+ * published after a budget breach.
  */
 object Loader {
 
@@ -170,9 +172,13 @@ object Loader {
       * bde_copy error-limit abort. */
     def enforceBudget(): Unit =
       maxFileErrors.foreach { b =>
-        files.zip(parts).foreach { case (file, (_, _, obsOpt)) =>
+        files.zip(parts).foreach { case (file, (header, _, obsOpt)) =>
           obsOpt.foreach { obs =>
-            val bad = obs.get("malformed").asInstanceOf[Long]
+            // Adaptive execution drops a join side that yields no row from
+            // the final plan, the observation of its scan with it; only then
+            // is the file counted again.
+            val bad = obs.get.get("malformed").fold(
+              BdeFormat.countMalformed(spark, file, header))(_.asInstanceOf[Long])
             if (bad > b)
               throw new IllegalStateException(
                 s"$file: $bad malformed rows exceed max_file_errors=$b")
@@ -184,37 +190,15 @@ object Loader {
   /**
    * The commit step all three loads end in — the reference's apply →
    * `_bde_CheckTableCount` → commit or roll back (sql:1770,1944,2006-2085):
-   * stage the new version, gate it, then publish it or discard it.
-   *
-   * `next` builds the new version from `old` as the merge reads it. When
-   * `old` is given, its row count is an observed metric of the staged write,
-   * as is the new row count, so the gate re-counts nothing and never re-reads
-   * the staged version. `checkStaged` runs after the write and before the
-   * gate (the level-0 replace's file-error budget, whose observations the
-   * write fires).
-   */
-  private def commit(
-      sink: TableSink,
-      version: String,
-      old: Option[DataFrame],
-      tolError: Option[Double] = None,
-      tolWarning: Option[Double] = None,
-      checkStaged: () => Unit = () => ())(
-      next: Option[DataFrame] => DataFrame)(
-      stats: Long => LoadStats): LoadStats = {
-    val oldCounted = old.map(counted)
-    val (rows, newObs) = counted(next(oldCounted.map(_._1)))
-    gate(sink, sink.stage(rows, version), tolError, tolWarning, checkStaged)(
-      () => (oldCounted.fold(0L)(o => observedRows(o._2)), observedRows(newObs)))(stats)
-  }
-
-  /**
-   * Gate a staged version, then publish or discard it. `counts` gives the
-   * old and new row counts. A check that throws, or a new count below the
-   * error tolerance of the old count, discards the staged version: the
-   * published one is untouched. A count below only the warning tolerance
-   * still publishes and adds a warning to the stats, as the reference
-   * raises a WARNING there. `stats` gets the new row count.
+   * gate a staged version, then publish or discard it. `checkStaged` runs
+   * first (the file-error budget, whose observations the staged write
+   * fires); `counts` then gives the old and new row counts, observed on the
+   * load's own scans, so the gate never re-reads the staged version. A check
+   * that throws, or a new count below the error tolerance of the old count,
+   * discards the staged version: the published one is untouched. A count
+   * below only the warning tolerance still publishes and adds a warning to
+   * the stats, as the reference raises a WARNING there. `stats` gets the new
+   * row count.
    */
   private def gate(
       sink: TableSink,
@@ -257,8 +241,9 @@ object Loader {
       columnOverrides: Seq[BdeFormat.BdeColumn] = Nil,
       maxFileErrors: Option[Long] = None): LoadStats = {
     val read = new TableFiles(spark, files, columnOverrides, clean, maxFileErrors)
-    commit(sink, version, old = None, checkStaged = () => read.enforceBudget())(
-      _ => read.rows(None))(
+    val (rows, newObs) = counted(read.rows(None))
+    gate(sink, sink.stage(rows, version), tolError = None, tolWarning = None,
+      checkStaged = () => read.enforceBudget())(() => (0L, observedRows(newObs)))(
       n => LoadStats(sink.table, n, 0, 0, 0, aborted = false, "", read.details))
   }
 
@@ -390,9 +375,13 @@ object Loader {
   }
 
   /** E3: level-0 applied as a diff (`full-incremental`, and the `l5_is_full`
-    * table mode): classify via [[Diff.fullDiff]], then commit through the
-    * same tolerance gate as E2 (the reference's incremental arm also
-    * tolerance-checks, sql:1944). */
+    * table mode) in ONE distributed pass, as the reference's one
+    * `ver_apply_table_differences` (sql:1914-1948): the kept rows of
+    * [[Diff.applySnapshot]] are the staged version, and every count rides on
+    * that write (the old, new and I/U/D counts on the join, each side's
+    * input rows below it). Nothing is cached, collected or broadcast. It
+    * commits through the same tolerance gate as E2 (sql:1944), after the
+    * file-error budget and the check that no key repeats across the join. */
   def level0Incremental(
       spark: SparkSession,
       sink: TableSink,
@@ -410,25 +399,31 @@ object Loader {
     val cur = if (sink.exists) Some(sink.read()) else None
     val next = read.rows(cur.map(_.columns.toSeq))
     // First-ever load: the reference's table always exists (possibly empty),
-    // so its incremental arm degrades to all-inserts; diff against an empty
-    // frame with the snapshot's schema gives the same result here. A first
-    // load has no published version to count.
-    val base = cur.getOrElse(next.limit(0))
-    val actions = Diff.fullDiff(base, next, key).cache()
-    try {
-      val counts = actions.groupBy("action").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      def n(a: String) = counts.getOrElse(a, 0L)
-      // The collect above materialized the cached diff, scanning each
-      // snapshot file exactly once (fullDiff references `next` once) — the
-      // malformed observations are now final, and nothing is staged yet on
-      // breach. The snapshot is NOT cached: at 100 TB caching it would
-      // spill a full copy to executor disks.
+    // so its incremental arm degrades to all-inserts: the same pass over an
+    // empty table side, which adaptive execution drops from the plan.
+    val (curRows, curObs) = counted(cur.getOrElse(next.limit(0)))
+    val (nextRows, nextObs) = counted(next)
+    val diffObs = Observation(s"graft_diff_${obsId.incrementAndGet()}")
+    def rowsWhere(c: Column) = count(when(c, 1))
+    val action = col(Diff.SnapshotAction)
+    val diff = Diff.applySnapshot(curRows, nextRows, key).observe(diffObs,
+      rowsWhere(col(Diff.InCur)).as("old"), rowsWhere(col(Diff.InNext)).as("next"),
+      rowsWhere(col(Diff.Kept)).as("new"), rowsWhere(action === Diff.ActionInsert).as("I"),
+      rowsWhere(action === Diff.ActionUpdate).as("U"),
+      rowsWhere(action === Diff.ActionDelete).as("D"))
+    val staged = sink.stage(diff.where(col(Diff.Kept)).select(curRows.columns.toSeq.map(col): _*),
+      version)
+    // adaptive execution drops a join side that yields no row, and the
+    // count observed on it with it
+    def n(obs: Observation, name: String) = obs.get.get(name).fold(0L)(_.asInstanceOf[Long])
+    gate(sink, staged, tolError, tolWarning, checkStaged = () => {
       read.enforceBudget()
-      commit(sink, version, cur, tolError, tolWarning)(
-        old => Diff.applyActions(old.getOrElse(base), next, actions, key))(
-        _ => LoadStats(sink.table, n("I"), n("U"), 0, n("D"), aborted = false,
-          "", read.details))
-    } finally actions.unpersist()
+      // a key repeated on one side joins the other side's row more than once
+      if (n(diffObs, "old") > n(curObs, "rows") || n(diffObs, "next") > n(nextObs, "rows"))
+        throw new IllegalStateException(s"table ${sink.table}: a value of key column " +
+          s"$key repeats on one side of the diff and is on the other; the key must be unique")
+    })(() => (n(diffObs, "old"), n(diffObs, "new")))(
+      _ => LoadStats(sink.table, n(diffObs, "I"), n(diffObs, "U"), 0, n(diffObs, "D"),
+        aborted = false, "", read.details))
   }
 }

@@ -123,9 +123,18 @@ final class ParquetTableSink(
   private def versionsRead(version: String): Seq[String] =
     chainOf(version).fold(Seq(version))(_.layers.map(_.version))
 
-  /** A full version, its schema read from its files (one Spark job). */
-  private def parquet(version: String): DataFrame =
-    spark.read.parquet(dir(version).toString)
+  /** The schema of each full version this sink has read. A published
+    * version's files never change, so a schema read once stays valid
+    * until its directory is staged again ([[freshName]]). */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]
+
+  /** A full version, its schema read from its files (one Spark job) on the
+    * first read of it by this sink. */
+  private def parquet(version: String): DataFrame = {
+    val path = dir(version).toString
+    spark.read.schema(schemas.computeIfAbsent(version, _ => spark.read.parquet(path).schema))
+      .parquet(path)
+  }
 
   /** A layer of a chain, read with the schema its manifest records. */
   private def parquet(layer: Layer): DataFrame =
@@ -160,9 +169,12 @@ final class ParquetTableSink(
   private def freshName(version: String): String = {
     val current = currentVersion
     val base = s"v_$version"
-    (Iterator.single(base) ++ Iterator.from(1).map(i => s"${base}_r$i"))
+    val name = (Iterator.single(base) ++ Iterator.from(1).map(i => s"${base}_r$i"))
       .find(n => !current.contains(n) && !fs.exists(dir(n)))
       .get
+    // a pruned version's name can be written again, with other files
+    schemas.remove(name)
+    name
   }
 
   def stage(df: DataFrame, version: String): String = {
@@ -183,7 +195,7 @@ final class ParquetTableSink(
       case _ => false
     }
     // a full published version becomes the base of a new chain; its
-    // schema is read once here, then carried by every manifest
+    // schema, known from the read of it, is carried by every manifest
     def newChain(v: String) = Chain(key, Layer(v, parquet(v).schema), Nil)
     currentVersion.filter(_ => integerKey)
       .map(v => chainOf(v).getOrElse(newChain(v)))

@@ -3,11 +3,16 @@ package graft.bde
 import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.propBoolean
+import org.scalatest.Outcome
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
 
 import graft.SparkSuite
 
@@ -21,8 +26,17 @@ import graft.SparkSuite
  * combination a generator finds — the hand-written fixtures cannot
  * enumerate those.
  */
-class DiffPropertySpec extends SparkSuite {
+class DiffPropertySpec extends SparkSuite with TimeLimits {
+  import DiffPropertySpec._
   import spark.implicits._
+
+  // `Observation.get` blocks forever when no action evaluated the observed
+  // node: every test runs under `failAfter`, and the signaler interrupts a
+  // blocked load instead of hanging the suite
+  implicit val signaler: Signaler = ThreadSignaler
+
+  override def withFixture(test: NoArgTest): Outcome =
+    failAfter(10.minutes)(super.withFixture(test))
 
   private type Tbl = Map[Long, (Option[Int], String)]
 
@@ -274,5 +288,200 @@ class DiffPropertySpec extends SparkSuite {
       s"no compaction at the delta-count limit: $seen")
     assert(seen.exists(_.sliding(2).exists(d => d.head > 0 && d.head < ParquetTableSink.MaxDeltas &&
       d.last == 0)), s"no compaction by bytes: $seen")
+  }
+
+  // ---- level-0 diff loader vs the reference composition -----------------
+
+  private def drowsDf(rows: Seq[DRow], aType: DataType): DataFrame =
+    spark.createDataFrame(rows.map { case (k, a, b) =>
+      Row(k.map(Long.box).orNull,
+        a.map(v => if (aType == LongType) Long.box(v.toLong) else Int.box(v)).orNull, b.orNull)
+    }.asJava, StructType(Seq(StructField(DiffKey, LongType), StructField("a", aType),
+      StructField("b", StringType))))
+
+  /** Publish `rows` into `sink`; chained, the same rows read as a base whose
+    * first half of keys (and two keys of its own) one delta replaces. */
+  private def publishRows(sink: ParquetTableSink, c: DiffCase, rows: Seq[DRow]): Unit = {
+    val keys = rows.flatMap(_._1).distinct.sorted
+    if (!c.chained || keys.isEmpty) sink.replace(drowsDf(rows, c.aType), "1")
+    else {
+      val replaced = keys.take((keys.size + 1) / 2).toSet
+      val (inDelta, inBase) = rows.partition(_._1.exists(replaced))
+      val stale = inDelta.map { case (k, a, _) => (k, a, Some("stale")) } ++
+        Seq((Some(90L), Some(1), Some("gone")), (Some(91L), None, None))
+      sink.replace(drowsDf(inBase ++ stale, c.aType), "0")
+      sink.publish(sink.stage(drowsDf(inDelta, c.aType),
+        (replaced.toSeq ++ Seq(90L, 91L)).toDF(DiffKey), DiffKey, "1"))
+    }
+  }
+
+  private def snapLine(order: Seq[String])(r: DRow): String = order.map {
+    case DiffKey => r._1.fold("")(_.toString)
+    case "a" => r._2.fold("")(_.toString)
+    case "b" => r._3.getOrElse("")
+    case _ => "q"
+  }.mkString("", "|", "|")
+
+  private def sortedAny(d: DataFrame): Seq[Seq[Any]] =
+    d.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+
+  private def types(d: DataFrame): Seq[(String, DataType)] =
+    d.schema.fields.map(f => f.name -> f.dataType).toSeq
+
+  /** Run `level0Incremental` for `c` and compare it with today's composition:
+    * `fullDiff` + `applyActions` + `groupBy("action").count()`. A key that is
+    * repeated and on both sides may instead fail the load, naming the table
+    * and the key, with nothing published. */
+  private def checkDiff(c: DiffCase): Prop = {
+    val dir = Files.createTempDirectory("l0-diff-pin")
+    val sink = new ParquetTableSink(spark, dir.resolve("tables").toString, DiffTable)
+    c.published.foreach(publishRows(sink, c, _))
+    val snap = dir.resolve("snap.crs")
+    val snapTypes = Map(DiffKey -> "bigint", "a" -> c.snapType, "b" -> "varchar", "x" -> "varchar")
+    Files.writeString(snap, OrchestratorScenario.crs(DiffTable,
+      c.snapOrder.map(n => n -> snapTypes(n)), c.snapshot.map(snapLine(c.snapOrder))))
+
+    val cur = if (sink.exists) Some(sink.read()) else None
+    val file = BdeFormat.readFile(spark, snap.toString)
+    val next = cur.fold(file)(t => BdeFormat.selectValidColumns(file, t.columns.toSeq))
+    val base = cur.getOrElse(next.limit(0))
+    val actions = Diff.fullDiff(base, next, DiffKey)
+    val refCounts = actions.groupBy("action").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    def n(a: String) = refCounts.getOrElse(a, 0L)
+    val ref = Diff.applyActions(base, next, actions, DiffKey)
+    val (refRows, refTypes) = (sortedAny(ref), types(ref))
+    val oldRows = cur.fold(Seq.empty[Seq[Any]])(sortedAny)
+    // the gate's counts, as a warning tolerance no count meets reports them
+    val refGate =
+      if (oldRows.isEmpty) Nil
+      else Seq(s"table count ${refRows.size} below warning tolerance of old count ${oldRows.size}")
+    val before = sink.currentVersion
+
+    val where = s"in $c"
+    Try(Loader.level0Incremental(spark, sink, Seq(snap.toString), DiffKey, "2",
+        tolWarning = Some(1e9), maxFileErrors = c.budget)) match {
+      case Success(s) =>
+        val loaded = sink.read()
+        (sortedAny(loaded) == refRows) :| s"rows: ${sortedAny(loaded)} vs $refRows $where" &&
+          (types(loaded) == refTypes) :| s"schema: ${types(loaded)} vs $refTypes $where" &&
+          ((s.ninsert, s.nupdate, s.nnullupdate, s.ndelete) == ((n("I"), n("U"), 0L, n("D")))) :|
+            s"stats: $s vs $refCounts $where" &&
+          (s.warnings == refGate) :| s"gate counts: ${s.warnings} vs $refGate $where" &&
+          (!s.aborted) :| "no error tolerance set: never aborts"
+      case Failure(e: IllegalStateException) if c.matchedDuplicate =>
+        val msg = String.valueOf(e.getMessage)
+        (msg.contains(DiffTable) && msg.contains(DiffKey)) :| s"error names table and key: $msg" &&
+          (sink.currentVersion == before) :| s"nothing published $where" &&
+          (!Files.exists(dir.resolve(s"tables/$DiffTable/v_2"))) :| s"staged version discarded $where"
+      case Failure(e) => false :| s"load failed: $e $where"
+    }
+  }
+
+  private val genDVals: Gen[(Option[Int], Option[String])] = for {
+    a <- Gen.option(Gen.choose(0, 3))
+    b <- Gen.option(Gen.oneOf("x", "y", "z"))
+  } yield (a, b)
+
+  /** Rows with distinct keys from 1..10, plus (sometimes) NULL-key rows and
+    * one repeated key. */
+  private val genDRows: Gen[Seq[DRow]] = for {
+    keys <- Gen.someOf(1L to 10L)
+    rows <- Gen.sequence[List[DRow], DRow](keys.toList.map(k =>
+      genDVals.map { case (a, b) => (Some(k), a, b) }))
+    nullKeys <- Gen.frequency(3 -> Gen.const(0), 1 -> Gen.choose(1, 2))
+    nullRows <- Gen.listOfN(nullKeys, genDVals.map { case (a, b) => (None, a, b) })
+    dup <- Gen.frequency(5 -> Gen.const(Nil), 1 -> Gen.someOf(rows).map(_.take(1)))
+  } yield rows ++ nullRows ++ dup
+
+  /** A snapshot related to `cur`: identical, empty, or with keys dropped,
+    * modified and added, NULL-key rows and repeated keys. */
+  private def genSnapshot(cur: Seq[DRow]): Gen[Seq[DRow]] = Gen.frequency(
+    1 -> Gen.const(cur),
+    1 -> Gen.const(Nil),
+    6 -> (for {
+      kept <- Gen.someOf(cur)
+      mods <- Gen.sequence[List[DRow], DRow](kept.toList.map(r =>
+        Gen.frequency(1 -> Gen.const(r), 1 -> genDVals.map { case (a, b) => (r._1, a, b) })))
+      added <- genDRows.map(_.filterNot(r => r._1.exists(k => cur.exists(_._1.contains(k)))))
+    } yield mods ++ added))
+
+  private val genDiffCase: Gen[DiffCase] = for {
+    published <- Gen.frequency(1 -> Gen.const(None), 1 -> Gen.const(Some(Nil)),
+      5 -> genDRows.map(Some(_)))
+    snapshot <- genSnapshot(published.getOrElse(Nil))
+    aType <- Gen.oneOf(IntegerType, LongType)
+    snapType <- Gen.oneOf("integer", "bigint")
+    snapOrder <- Gen.oneOf(Seq(DiffKey, "a", "b"), Seq("b", DiffKey, "a"), Seq("a", "x", "b", DiffKey))
+    chained <- Gen.prob(0.3)
+    budget <- Gen.oneOf(None, Some(0L))
+  } yield DiffCase(published, snapshot, aType, snapType, snapOrder, chained, budget)
+
+  private def drow(k: Long, a: Int, b: String): DRow = (Some(k), Some(a), Some(b))
+
+  test("level0Incremental matches fullDiff + applyActions on the named cases") {
+    val t = Seq(drow(1, 1, "x"), drow(2, 2, "y"), drow(3, 3, "z"))
+    val cases = Seq(
+      "identical snapshot" -> DiffCase(Some(t), t),
+      "NULLs in compared columns" -> DiffCase(Some(t :+ ((Some(4L), None, None))),
+        Seq((Some(1L), None, Some("x")), (Some(2L), Some(2), None), drow(3, 3, "z"),
+          (Some(4L), None, None))),
+      "every row deleted" -> DiffCase(Some(t), Nil),
+      "empty published table" -> DiffCase(Some(Nil), t),
+      "first load" -> DiffCase(None, t :+ ((None, Some(5), Some("n")))),
+      "NULL keys on either side" -> DiffCase(Some(t :+ ((None, Some(7), Some("c")))),
+        Seq(drow(1, 9, "x"), (None, Some(8), Some("s")), drow(4, 4, "w"))),
+      "a base plus a level-5 delta" -> DiffCase(Some(t :+ drow(4, 4, "w")),
+        Seq(drow(1, 1, "x"), drow(2, 5, "y"), drow(5, 5, "v")), chained = true),
+      "widened types, other column order" -> DiffCase(Some(t),
+        Seq(drow(1, 1, "x"), drow(2, 7, "y")), aType = IntegerType, snapType = "bigint",
+        snapOrder = Seq("b", "x", DiffKey, "a")),
+      "repeated key in the table, on both sides" -> DiffCase(Some(t :+ drow(2, 2, "y")), t),
+      "repeated key in the snapshot, on both sides" -> DiffCase(Some(t), t :+ drow(3, 3, "q")),
+      "repeated keys on one side only" -> DiffCase(Some(t :+ drow(3, 0, "d")),
+        Seq(drow(1, 1, "x"), drow(5, 5, "v"), drow(5, 6, "w"))))
+    val failures = for {
+      (name, c) <- cases
+      budget <- Seq(None, Some(0L))
+      res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(1),
+        Prop.forAllNoShrink(Gen.const(()))(_ => checkDiff(c.copy(budget = budget))))
+      if !res.passed
+    } yield s"$name (budget $budget): ${res.status}"
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("level0Incremental matches fullDiff + applyActions on random snapshot pairs") {
+    run(Prop.forAllNoShrink(genDiffCase)(checkDiff), cases = 30)
+  }
+}
+
+object DiffPropertySpec {
+  /** A row of the level-0 diff cases: key, integer, text; any may be NULL. */
+  type DRow = (Option[Long], Option[Int], Option[String])
+
+  val DiffTable = "t_pin"
+  val DiffKey = "rowkey"
+
+  /** One level-0 diff load. `published`: None = no published version,
+    * else its rows, stored with `a` of type `aType` and, when `chained`, as
+    * a base plus one level-5 delta. The snapshot file declares `a` as
+    * `snapType` and lists its columns in `snapOrder` (`x` is a column the
+    * table lacks); `budget` is the load's file-error budget. */
+  final case class DiffCase(
+      published: Option[Seq[DRow]],
+      snapshot: Seq[DRow],
+      aType: DataType = IntegerType,
+      snapType: String = "integer",
+      snapOrder: Seq[String] = Seq(DiffKey, "a", "b"),
+      chained: Boolean = false,
+      budget: Option[Long] = None) {
+
+    private def counts(rows: Seq[DRow]) = rows.flatMap(_._1).groupMapReduce(identity)(_ => 1)(_ + _)
+
+    /** A key on both sides, repeated on at least one of them. */
+    def matchedDuplicate: Boolean = published.exists { p =>
+      val (pc, sc) = (counts(p), counts(snapshot))
+      pc.keySet.intersect(sc.keySet).exists(k => pc(k) > 1 || sc(k) > 1)
+    }
   }
 }

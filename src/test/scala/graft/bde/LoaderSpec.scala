@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlanInfo
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.SpanSugar._
@@ -109,42 +110,87 @@ class LoaderSpec extends SparkSuite with TimeLimits {
       (r.getInt(0), r.getString(1))).toSeq == Seq(2 -> "B", 3 -> "c"))
   }
 
+  /** Run `body`, returning the input records every task read meanwhile,
+    * once at least `atLeast` have been accounted. */
+  private def recordsRead[A](atLeast: Long)(body: => A): (A, Long) = {
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        read.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val a = try body finally {
+      // listener events are posted asynchronously; poll until the scan's
+      // records have been accounted, then allow a grace period for stragglers
+      val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
+      while (read.get < atLeast && System.nanoTime < deadline)
+        Thread.sleep(50)
+      Thread.sleep(500)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    (a, read.get)
+  }
+
+  /** A `t_sp` file of five rows, two of them malformed. */
+  private def budgetFile(root: Path): (Path, Long) = {
+    val file = root.resolve("sp.crs")
+    val dataRows = Seq("1|a|", "2|b", "3|c|", "4|d|e|", "5|f|") // 2 malformed
+    Files.writeString(file, OrchestratorScenario.crs("t_sp",
+      Seq("id" -> "integer", "v" -> "varchar"), dataRows))
+    (file, Files.readAllLines(file).size.toLong)
+  }
+
   test("file-error budget is single-pass: one scan per file, observed count exact") {
     // Count records read by ALL tasks while the load runs: the old design
     // pre-scanned each file to count malformed rows and then scanned it
     // again to load — total input ≈ 2× the file's lines. The Observation
     // design must stay at ≈ 1×.
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        recordsRead.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-    }
     val root = Files.createTempDirectory("budget-singlepass")
-    val file = root.resolve("sp.crs")
-    val dataRows = Seq("1|a|", "2|b", "3|c|", "4|d|e|", "5|f|") // 2 malformed
-    Files.writeString(file, OrchestratorScenario.crs("t_sp",
-      Seq("id" -> "integer", "v" -> "varchar"), dataRows))
-    val fileLines = Files.readAllLines(file).size
+    val (file, fileLines) = budgetFile(root)
     val sink = new ParquetTableSink(spark, root.resolve("t").toString, "t_sp")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val stats = Loader.level0Replace(spark, sink, Seq(file.toString), "v1",
-        maxFileErrors = Some(2))
-      assert(stats.ninsert == 3) // observed from the write, not a recount
-    } finally {
-      // listener events are posted asynchronously; poll until the scan's
-      // records have been accounted, then allow a grace period for stragglers
-      val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
-      while (recordsRead.get < fileLines && System.nanoTime < deadline)
-        Thread.sleep(50)
-      Thread.sleep(500)
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    val (s, read) = recordsRead(fileLines)(
+      Loader.level0Replace(spark, sink, Seq(file.toString), "v1", maxFileErrors = Some(2)))
+    assert(s.ninsert == 3) // observed from the write, not a recount
     // One text scan of the file (header lines included by TextInputFormat);
     // a second pass would push this to ≥ 2× fileLines.
-    assert(recordsRead.get >= fileLines)
-    assert(recordsRead.get < 2L * fileLines,
-      s"expected a single scan of $fileLines lines, saw ${recordsRead.get} records read")
+    assert(read >= fileLines)
+    assert(read < 2L * fileLines,
+      s"expected a single scan of $fileLines lines, saw $read records read")
+  }
+
+  test("file-error budget on the level-0 diff: one scan of the file and the table, count exact") {
+    failAfter(2.minutes) {
+      val root = Files.createTempDirectory("budget-diff")
+      val (file, fileLines) = budgetFile(root)
+      val sink = new ParquetTableSink(spark, root.resolve("t").toString, "t_sp")
+      sink.replace(Seq((1, "a"), (2, "b"), (9, "z")).toDF("id", "v"), "v0")
+      val tableRows = 3L
+      val (s, read) = recordsRead(fileLines + tableRows)(
+        Loader.level0Incremental(spark, sink, Seq(file.toString), "id", "v1",
+          maxFileErrors = Some(2)))
+      // 3 and 5 inserted, 2 deleted (its row is malformed), 9 deleted
+      assert(stats(s) == ((2L, 0L, 0L, 2L)))
+      assert(sink.read().orderBy("id").collect().map(_.toSeq).toSeq ==
+        Seq(Seq(1, "a"), Seq(3, "c"), Seq(5, "f")))
+      // one scan of each: a second scan of the file adds fileLines, of the
+      // table tableRows
+      assert(read >= fileLines + tableRows)
+      assert(read < fileLines + 2 * tableRows,
+        s"expected one scan of $fileLines lines and $tableRows rows, saw $read records read")
+      // a breach, also where every row is malformed and the snapshot side
+      // of the join is empty: the staged version is discarded
+      val bad = root.resolve("bad.crs")
+      Files.writeString(bad, OrchestratorScenario.crs("t_sp",
+        Seq("id" -> "integer", "v" -> "varchar"), Seq("6|x", "7|y|z|")))
+      Seq(file, bad).foreach { f =>
+        val e = intercept[IllegalStateException](
+          Loader.level0Incremental(spark, sink, Seq(f.toString), "id", "v2",
+            maxFileErrors = Some(1)))
+        assert(e.getMessage.contains("2 malformed rows exceed max_file_errors=1"))
+        assert(sink.currentVersion.contains("v_v1"))
+        assert(!Files.exists(root.resolve("t/t_sp/v_v2")))
+      }
+    }
   }
 
   test("pruneVersions keeps the published + N previous versions, drops the rest") {
@@ -225,12 +271,15 @@ class LoaderSpec extends SparkSuite with TimeLimits {
     }
   }
 
-  /** Run `body`, recording the description of every Spark job it starts
-    * and the plan of every SQL execution. */
-  private def withJobs[A](body: => A): (A, Seq[String], Seq[SparkPlanInfo]) = {
+  /** Run `body`, recording the description of every Spark job it starts,
+    * the plan of every SQL execution, and every plan adaptive execution
+    * re-optimized it into. */
+  private def withJobs[A](body: => A)
+      : (A, Seq[String], Seq[SparkPlanInfo], Seq[SparkPlanInfo]) = {
     val marker = "level5-job-count-marker"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]
+    val adaptive = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.add(Option(e.properties)
@@ -238,6 +287,7 @@ class LoaderSpec extends SparkSuite with TimeLimits {
           .getOrElse(e.stageInfos.map(_.name).mkString(" | ")))
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => adaptive.add(u.sparkPlanInfo)
         case _ =>
       }
     }
@@ -252,11 +302,13 @@ class LoaderSpec extends SparkSuite with TimeLimits {
       while (!jobs.contains(marker)) Thread.sleep(20)
       a
     } finally spark.sparkContext.removeSparkListener(listener)
-    (a, jobs.asScala.takeWhile(_ != marker).toSeq, plans.asScala.toSeq)
+    (a, jobs.asScala.takeWhile(_ != marker).toSeq, plans.asScala.toSeq, adaptive.asScala.toSeq)
   }
 
   private def scans(p: SparkPlanInfo): Seq[String] =
     p.metadata.get("Location").toSeq ++ p.children.flatMap(scans)
+
+  private def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
 
   private def isWrite(p: SparkPlanInfo): Boolean =
     p.nodeName.contains("InsertIntoHadoopFsRelation") || p.children.exists(isWrite)
@@ -267,21 +319,47 @@ class LoaderSpec extends SparkSuite with TimeLimits {
       val inc = L5Slice.dataFile(dir, "l5.crs", L5Slice.l5Rows)
       val chg = L5Slice.localChanges(spark,
         L5Slice.changeFile(dir, L5Slice.changes))
-      val (s, jobs, plans) = withJobs(
+      val (s, jobs, plans, _) = withJobs(
         Loader.level5Apply(spark, sink, Seq(inc), chg, L5Slice.Table,
           L5Slice.Key, L5Slice.L5Version, uniqueCols = Seq("lin_id"),
           tolError = Some(0.20), tolWarning = Some(0.95), maxFileErrors = Some(0)))
       assert(stats(s) == ((3L, 2L, 0L, 1L)))
       val loadJobs = jobs.size
       // the change-set-sized sets are collected once and broadcast from the
-      // driver; the counts ride on the classify scan and the staged write. A
-      // bare count() or a second classification pass pushes this over the
-      // bound.
-      assert(loadJobs <= 15, s"level-5 load ran $loadJobs Spark jobs")
+      // driver; the counts ride on the classify scan and the staged write; the
+      // first delta takes the base's schema from the sink's own read. A bare
+      // count() or a second classification pass pushes this over the bound.
+      assert(loadJobs <= 14, s"level-5 load ran $loadJobs Spark jobs")
       val stagedScans = plans.flatMap(scans)
         .filter(_.contains(s"v_${L5Slice.L5Version}"))
       assert(stagedScans.isEmpty, s"the staged version was re-read: $stagedScans")
       assert(rows(sink.read()).map(_.last) == L5Slice.finalKeys)
+    }
+  }
+
+  test("level-0 diff over a full version: at most 4 Spark jobs, nothing cached or broadcast, one scan of the table") {
+    failAfter(3.minutes) {
+      val (dir, sink) = loadedSlice()
+      // 80401150 deleted, 80401149 updated, 80401148 unchanged, 100 inserted
+      val snap = L5Slice.dataFile(dir, "snap.crs", Seq("4457327|20|29694578|N|80401149|",
+        "4457328|1|29694591|Y|80401148|", "4457329|4|10000000|Y|100|"))
+      val (s, jobs, plans, adaptive) = withJobs(
+        Loader.level0Incremental(spark, sink, Seq(snap), L5Slice.Key, L5Slice.L5Version,
+          tolError = Some(0.20), tolWarning = Some(0.95), maxFileErrors = Some(0)))
+      assert(stats(s) == ((1L, 1L, 0L, 1L)))
+      assert(s.warnings.isEmpty && !s.aborted)
+      // the schema read of the table, one shuffle map stage per side of the
+      // join and the staged write
+      assert(jobs.size <= 4, s"level-0 diff ran ${jobs.size} Spark jobs: $jobs")
+      val names = (plans ++ adaptive).flatMap(nodes).map(n => s"${n.nodeName} ${n.simpleString}")
+      assert(!names.exists(n => n.contains("InMemoryRelation") || n.contains("InMemoryTableScan")),
+        s"a plan caches: $names")
+      assert(!names.exists(_.contains("BroadcastExchange")), s"a plan broadcasts: $names")
+      val tableScans = plans.flatMap(scans).filter(_.contains(s"v_${L5Slice.L0Version}"))
+      assert(tableScans.size == 1, s"the published version was scanned ${tableScans.size} times")
+      assert(sink.currentVersion.contains(s"v_${L5Slice.L5Version}"))
+      assert(rows(sink.read()).map(r => (r(1), r.last)) ==
+        Seq((4, 100), (1, 80401148), (20, 80401149)))
     }
   }
 
@@ -327,7 +405,7 @@ class LoaderSpec extends SparkSuite with TimeLimits {
       val (dir, sink) = chainedSlice()
       val inc = L5Slice.dataFile(dir, "l5b.crs", l5bRows)
       val chg = L5Slice.localChanges(spark, L5Slice.changeFile(dir, l5bChanges))
-      val (s, jobs, plans) = withJobs(
+      val (s, jobs, plans, _) = withJobs(
         Loader.level5Apply(spark, sink, Seq(inc), chg, L5Slice.Table,
           L5Slice.Key, l5bVersion, uniqueCols = Seq("lin_id"),
           tolError = Some(0.20), tolWarning = Some(0.95), maxFileErrors = Some(0)))
